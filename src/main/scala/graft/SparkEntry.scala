@@ -2812,17 +2812,15 @@ object SparkEntry {
       // SPARK_GRAFT_TRI_SPILL_BUDGET (bytes — the per-wave wedge-
       // shuffle target, ~1/4 of free scratch to leave room for the
       // wave's other exchanges) derives W from the exact wedge count
-      // (Graph.triangleCountsBudgeted, judge-r16 task 2). The manual
-      // SPARK_GRAFT_TRI_WAVES knob remains for bit-identity checks;
-      // both unset = the driver-gate single-job W=1 cluster plan
+      // (Graph.triangleCountsBudgeted, judge-r16 task 2); unset = the
+      // single-job W=1 cluster plan
       val triEdges = a.join(b, "l_orderkey")
         .where(col("src") < col("dst"))
         .select(col("src"), col("dst"))
       sys.env.get("SPARK_GRAFT_TRI_SPILL_BUDGET") match {
         case Some(budget) =>
           Graph.triangleCountsBudgeted(triEdges, budget.toLong)
-        case None => Graph.triangleCounts(triEdges, apexWaves =
-          sys.env.getOrElse("SPARK_GRAFT_TRI_WAVES", "1").toInt)
+        case None => Graph.triangleCounts(triEdges)
       }
     }),
     "graph_labelprop" -> ((s, d) => {

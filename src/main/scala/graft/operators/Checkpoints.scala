@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{Callable, ExecutionException,
+  ExecutorCompletionService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lifecycle helper for eager localCheckpoint intermediates shared by
   * the iterative fits (CC fixpoint, BPE merge loop).
@@ -36,30 +39,58 @@ private[graft] object Checkpoints {
     * candidates, the four retrieval facets, the per-layout witnesses)
     * strictly back to back — each pin is a Spark job whose tail leaves
     * the cluster idle while the driver waits to submit the next. A
-    * bounded pool submits them together; FIFO scheduling back-fills
-    * one job's straggler tail with the next job's tasks. Results keep
-    * argument order; the first failure propagates (remaining thunks
-    * still run to completion — they are Spark jobs already in flight).
-    * Use ONLY for genuinely independent frames: a thunk must not read
-    * another thunk's result. */
+    * bounded pool of daemon threads (`graft-pareager-N`) submits them
+    * together; FIFO scheduling back-fills one job's straggler tail
+    * with the next job's tasks. Results keep argument order; an empty
+    * list returns Nil. Each thunk runs under its own Spark job group,
+    * so the FIRST failure (in completion order) cancels the siblings:
+    * queued thunks never start, running ones are interrupted and their
+    * groups' jobs cancelled until every pool thread has exited — no
+    * sibling work runs on into the caller's next query — and then the
+    * failing thunk's own exception propagates. Use ONLY for genuinely
+    * independent frames: a thunk must not read another thunk's
+    * result. */
   def parEager[T](thunks: (() => T)*): Seq[T] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(thunks.size, 4))
+    if (thunks.isEmpty) return Nil
+    val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val run = java.util.UUID.randomUUID()
+    val groups = thunks.indices.map(i => s"graft-pareager-$run-$i")
+    val pool = Executors.newFixedThreadPool(math.min(thunks.size, 4),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-pareager-${threadIds.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    def cancelAll(): Unit = sc.foreach(c => groups.foreach(c.cancelJobGroup))
     try {
-      val futs = thunks.map { t =>
-        pool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = t()
+      val done = new ExecutorCompletionService[T](pool)
+      val futs = thunks.zip(groups).map { case (t, g) =>
+        done.submit(new Callable[T] {
+          def call(): T = {
+            sc.foreach(_.setJobGroup(g, "Checkpoints.parEager",
+              interruptOnCancel = true))
+            t()
+          }
         })
       }
-      futs.map { f =>
-        try f.get()
-        catch { // surface the thunk's own exception, not the wrapper
-          case e: java.util.concurrent.ExecutionException =>
+      thunks.foreach { _ =>
+        try done.take().get()
+        catch {
+          case e: ExecutionException =>
+            pool.shutdownNow()
+            while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
+              cancelAll()
+            cancelAll() // jobs submitted just before a thread exited
+            // surface the thunk's own exception, not the wrapper
             throw e.getCause
         }
       }
+      futs.map(_.get())
     } finally pool.shutdown()
   }
+
+  private val threadIds = new AtomicInteger()
 
   /** Strip the size-estimate stats a localCheckpoint preserves, keeping
     * the SAME materialized blocks — required whenever an iterative fit

@@ -921,7 +921,6 @@ object Dedup {
   def duplicateClusters(pairs: DataFrame,
       maxIters: Int = 20,
       requireConvergence: Boolean = false): DataFrame = {
-    val trace = sys.env.contains("SPARK_GRAFT_CC_TRACE")
     val sym = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
     // self-loops replace the per-round `∪ labels` term: min over
@@ -960,15 +959,6 @@ object Dedup {
         .agg(min(col("cluster_id")).as("cluster_id"))
       var iters = 0
       var converged = false
-      // test seam for the hop-schedule A/B harness (graft.Scratch):
-      // how many leading rounds run a SINGLE hop before the schedule
-      // switches to two hops per materialization. Unset = 2 (the
-      // shipped adaptive schedule); "99" ≈ all-single, "0" =
-      // all-double. The fixpoint label set is schedule-independent
-      // (see below), so this knob can only move WALL TIME, never the
-      // output — which is exactly what makes it a safe seam.
-      val singleRounds = sys.props.get("graft.cc.singleRounds")
-        .map(_.toInt).getOrElse(2)
       while (!converged && iters < maxIters) {
         // ADAPTIVE hop schedule (r18): near-clique duplicate graphs —
         // the common dedup case — converge in 1-2 hops, where an
@@ -983,7 +973,7 @@ object Dedup {
         // hop proves the single-hop fixpoint too; the fixpoint label
         // set is hop-schedule-independent, so the output is identical
         // either way.
-        var nextBk = (if (iters < singleRounds) hop(labels)
+        var nextBk = (if (iters < 2) hop(labels)
           else hop(hop(labels)))
           .localCheckpoint(false)
         var next: DataFrame = nextBk
@@ -1001,39 +991,22 @@ object Dedup {
                 coalesce(col("__plab"), l("cluster_id"))
                   .as("cluster_id"))
           }
-          // ADAPTIVE double jump (r19, the hop schedule mirrored):
-          // the first pass per round stays single — near-clique
-          // rounds' first compress is already stable and a composed
-          // pass would pay a wasted join to prove it — later passes
-          // compose TWO jumps per materialization (the inner one a
-          // lazy checkpoint the outer's self-join reads), halving the
-          // convergence-witness actions on the long-chain graphs that
-          // jump many times. Monotone labels: a sum-unchanged DOUBLE
-          // jump proves the single-jump fixpoint, so stability
-          // detection is exact either way and the fixpoint labels are
-          // identical. graft.cc.singleJumpPasses overrides for A/B
-          // (99 ≈ the r18 all-single shape).
-          val singleJumps = sys.props.get("graft.cc.singleJumpPasses")
-            .map(_.toInt).getOrElse(1)
+          // one jump per materialization. MEASURED NON-WIN (kept out):
+          // composing two jumps per pass after the first read slower
+          // on the duplicateClusters queries (interleaved at sf0.1 on
+          // a 4-core local[4] session: dedup_clusters 2.6-3.1 s single
+          // vs 2.7-3.5 s composed, dedup_semantic 5.2-6.7 vs 6.6-7.0 s)
           while (!stable && guard < 64) {
-            val (compBk, innerBk) =
-              if (guard < singleJumps) (jump(next).localCheckpoint(false),
-                None)
-              else {
-                val j1Bk = jump(next).localCheckpoint(false)
-                (jump(stripStats(j1Bk)).localCheckpoint(false), Some(j1Bk))
-              }
+            val compBk = jump(next).localCheckpoint(false)
             val comp = stripStats(compBk)
             val compSum = labelSum(comp)
             stable = sumsEqual(nextSum, compSum)
             if (nextBk ne labelsBk) releaseIntermediate(nextBk)
-            innerBk.foreach(releaseIntermediate)
             nextBk = compBk
             next = comp
             nextSum = compSum
             guard += 1
           }
-          if (trace) println(s"CC round=$iters passes=$guard")
         }
         curSum = nextSum
         if (labelsBk ne nextBk) releaseIntermediate(labelsBk)
@@ -1041,7 +1014,6 @@ object Dedup {
         labelsBk = nextBk
         iters += 1
       }
-      if (trace) println(s"CC rounds=$iters converged=$converged")
       if (!converged) {
         val msg = s"duplicateClusters stopped at maxIters=$maxIters with " +
           "labels still changing in the final round — convergence NOT " +

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Iterative graph analytics over edge lists — the PageRank-family
   * complement to [[Dedup.duplicateClusters]]' connected components.
@@ -176,30 +177,21 @@ object Graph {
     // ~0.9M canonical edges at sf0.1) and MOST wedges do not close —
     // yet the un-filtered plan shuffled and sorted every wedge into a
     // SortMergeJoin against canon. A Bloom filter over
-    // xxhash64(a, b) of the canonical edges (one tiny extra scan of
-    // the pinned canon + one count job) drops definitely-non-closing
-    // wedges BEFORE the exchange; false positives only cost a little
-    // extra shuffle and the join still runs, so the output is
-    // bit-identical (no false negatives). Measured interleaved at
-    // sf0.1: 5.5-6.4 s → 3.6-4.1 s (−35%), DIFF rows 0. Sized from
-    // the exact edge count; SKIPPED above the key cap (default 100M
-    // edges ≈ 90 MB of filter at 3% fpp — past that the broadcast
-    // cost flips the trade; override with SPARK_GRAFT_TRI_BLOOM_MAX_KEYS
-    // on clusters with the memory). `graft.tri.bloom=off` is the A/B
-    // test seam (graft.Scratch) — the filter is a pure optimization,
-    // so the knob can only move wall time, never the result. A
-    // shuffled-hash hint on the closing join measured a WASH post-
-    // Bloom (3.5-4.3 s vs 3.6-4.1 s) and adds build-side OOM exposure
-    // at scale — not kept (guide §1.2: config only after algorithm).
-    val bloomOff = sys.props.get("graft.tri.bloom").contains("off")
-    val bloomMaxKeys = sys.env.getOrElse(
-      "SPARK_GRAFT_TRI_BLOOM_MAX_KEYS", "100000000").toLong
-    val nEdges = if (bloomOff) 0L else canon.count()
-    val bfOpt =
-      if (bloomOff || nEdges == 0L || nEdges > bloomMaxKeys) None
-      else Some(edges.sparkSession.sparkContext.broadcast(
-        canon.stat.bloomFilter(
-          xxhash64(col("a"), col("b")), nEdges, 0.03)))
+    // xxhash64(a, b) of the canonical edges (one count job + one
+    // aggregate job over the pinned canon, built once for every wave)
+    // drops definitely-non-closing wedges BEFORE the exchange; false
+    // positives only cost a little extra shuffle and the join still
+    // runs, so the output is bit-identical (no false negatives).
+    // Measured interleaved at sf0.1: 5.5-6.4 s → 3.6-4.1 s (−35%).
+    // Sized from the exact edge count at 3% fpp; Spark's
+    // spark.sql.optimizer.runtime.bloomFilter.maxNumBits caps the
+    // bitmap (8 MB by default). A shuffled-hash hint on the closing
+    // join measured a WASH post-Bloom (3.5-4.3 s vs 3.6-4.1 s) and
+    // adds build-side OOM exposure at scale — not kept (guide §1.2:
+    // config only after algorithm).
+    val nEdges = math.max(canon.count(), 1L) // sizes must be positive
+    val closing = Relational.bloomBitmap(canon, Seq(col("a"), col("b")),
+      nEdges, BloomFilter.optimalNumOfBits(nEdges, 0.03))
     // wedges at the low endpoint; closing edge looked up in canonical
     // (a < b) form because orientation does not preserve id order
     def perNodeFor(wave: Int): DataFrame = {
@@ -209,11 +201,8 @@ object Graph {
       val mine = oriented.where(keep)
       val e1 = mine.select(col("src").as("u"), col("dst").as("v"))
       val e2 = mine.select(col("src").as("u"), col("dst").as("w"))
-      val wedges0 = e1.join(e2, Seq("u")).where(col("v") < col("w"))
-      val wedges = bfOpt.fold(wedges0) { bf =>
-        val mightClose = udf((h: Long) => bf.value.mightContainLong(h))
-        wedges0.where(mightClose(xxhash64(col("v"), col("w"))))
-      }
+      val wedges = e1.join(e2, Seq("u")).where(col("v") < col("w"))
+        .where(Relational.bloomMightContain(closing, Seq(col("v"), col("w"))))
       val tris = wedges.join(
         canon.select(col("a").as("v"), col("b").as("w")), Seq("v", "w"))
       tris

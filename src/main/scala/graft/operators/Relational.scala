@@ -56,27 +56,11 @@ object Relational {
         round(avg(col("l_discount")), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
 
-  /** Deterministic ordinal slice — the producer's batching primitive
-    * (reference: producer/ProducerOperations.scala:131-149) done right:
-    * the ordinal is computed ONCE over a total order with a unique
-    * tie-breaker, then ranges are plain filters. The reference re-ran the
-    * window per batch (O(total) each time).
-    *
-    * Scale note: a global row_number is inherently single-partition at
-    * the window step. For 100 TB use `withScalableOrdinal` below, which
-    * derives per-partition offsets instead of a global sort window.
-    */
-  def ordinalSlice(df: DataFrame, orderCols: Seq[Column],
-      start: Long, n: Long): DataFrame = {
-    val w = Window.orderBy(orderCols: _*)
-    df.withColumn("row_num", row_number().over(w))
-      .filter(col("row_num").between(start + 1, start + n))
-  }
-
   /** Scalable ordinal assignment: sort by range partitioning (Spark's
     * orderBy = range-partitioned sort, parallel), then add per-partition
     * offsets computed from partition sizes — no single-partition window.
-    * Ordinals are 1-based and identical to `ordinalSlice`'s.
+    * Ordinals are 1-based and identical to a global
+    * `row_number().over(Window.orderBy(orderCols))` (spec-pinned).
     *
     * Single-pass: the sorted data is materialized ONCE as an eager local
     * checkpoint; the partition-size pass and the final rows both read
@@ -1069,27 +1053,41 @@ object Relational {
     * row-level filtering, usable when the optimizer doesn't inject it.
     *
     * NOTE: EAGER — composing this operator runs one Spark job (the
-    * bloom build over `right`) so the bitmap can enter the plan as the
-    * foldable literal BloomFilterMightContain requires; the returned
-    * frame is lazy as usual.
+    * bloom build over `right`, [[bloomBitmap]]); the returned frame is
+    * lazy as usual.
     */
   def bloomSemiJoin(left: DataFrame, right: DataFrame, leftKey: String,
       rightKey: String, expectedItems: Long, numBits: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(left.sparkSession)
-    // one aggregated row (the bitmap, numBits/8 bytes) comes to the
-    // driver and re-enters the plan as a foldable literal — the same
-    // shape Spark's injected runtime filter gets from a reused subquery
-    // result, and what BloomFilterMightContain's type check requires
-    val bytes = right
-      .agg(call_function("graft_bloom_agg", xxhash64(col(rightKey)),
-        lit(expectedItems), lit(numBits)).as("__bf"))
-      .head().getAs[Array[Byte]](0)
+    val bitmap = bloomBitmap(right, Seq(col(rightKey)), expectedItems,
+      numBits)
     left
-      .filter(call_function("graft_might_contain", lit(bytes),
-        xxhash64(col(leftKey))))
+      .filter(bloomMightContain(bitmap, Seq(col(leftKey))))
       .join(right.select(col(rightKey)), col(leftKey) === col(rightKey),
         "left_semi")
   }
+
+  /** EAGER half of the Bloom prefilter: one aggregate job folds
+    * `xxhash64(keys)` over `df` into a serialized bitmap (Spark's
+    * BloomFilterAggregate; `numBits` is capped by
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`). One row,
+    * numBits/8 bytes, comes to the driver so it can re-enter plans as
+    * the foldable literal [[bloomMightContain]] requires — the same
+    * shape Spark's injected runtime filter gets from a reused subquery
+    * result. Null when `df` is empty. */
+  def bloomBitmap(df: DataFrame, keys: Seq[Column], expectedItems: Long,
+      numBits: Long): Array[Byte] = {
+    graft.functions.GraftFunctions.register(df.sparkSession)
+    df.agg(call_function("graft_bloom_agg", xxhash64(keys: _*),
+        lit(expectedItems), lit(numBits)))
+      .head().getAs[Array[Byte]](0)
+  }
+
+  /** Lazy half: a codegen'd predicate that is false only for rows whose
+    * `xxhash64(keys)` is definitely not in `bitmap` (no false
+    * negatives; a null bitmap — empty build side — rejects every
+    * row). `keys` must match the build's key types in order. */
+  def bloomMightContain(bitmap: Array[Byte], keys: Seq[Column]): Column =
+    call_function("graft_might_contain", lit(bitmap), xxhash64(keys: _*))
 
   /** As-of join (merge formulation): for each left row, the single
     * latest right row with rightTs <= leftTs under the equi-key, ties

@@ -179,7 +179,7 @@ object TextAnalysis {
     * cannot do this — the shared boundary space is consumed by the
     * first match and the second adjacent occurrence is missed. */
   private def bpeSeq(word: Column): Column =
-    concat(lit("  "), regexp_replace(word, "(.)", "$1  "))
+    concat(lit("  "), regexp_replace(word, "(?s)(.)", "$1  "))
 
   private def bpeApplyMerge(seq: Column, a: String, b: String): Column =
     call_function("replace", seq, lit(s" $a  $b "), lit(s" $a$b "))
@@ -654,7 +654,8 @@ object TextAnalysis {
     * leftmost-greedy non-overlapping pass per fired rule (after a
     * merge the scan resumes AFTER the merged symbol, so runs pair up:
     * a a a a → aa aa, never aa a a). Symbols are code points, matching
-    * the fit/apply regex "(.)". */
+    * the fit/apply regex "(?s)(.)" (DOTALL: a bare "." would skip the
+    * line terminators U+0085, U+2028 and U+2029). */
   private def mergeWord(w: String,
       pairRanks: Map[(String, String), Array[Long]],
       rankRule: Map[Long, (String, String)]): Seq[String] = {

@@ -78,9 +78,6 @@ object Sources {
       schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Multi-format batch sink (consumer/StreamProcessor.scala:156-184):
     * format is data, not code. Overwrite by default — append-mode
     * output paths should be keyed by batch/run id for idempotency (see

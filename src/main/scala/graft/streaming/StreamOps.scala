@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming transforms (SURVEY.md §2.9): the reference's per-batch
@@ -800,14 +800,4 @@ object StreamOps {
             ReservoirOut(g, i.id, i.w, i.p, tau, math.max(i.w, tau)))
       }.toDF()
   }
-
-  /** Event-time window start/end as plain columns (dashboard-friendly
-    * projection of the struct). */
-  def flattenWindow(df: DataFrame, windowCol: String = "window"): DataFrame =
-    df.select(
-      (col(s"$windowCol.start") +: col(s"$windowCol.end") +:
-        df.columns.filterNot(_ == windowCol).map(col).toSeq): _*)
-
-  /** Time-bucket column usable on both batch and streaming frames. */
-  def timeBucket(ts: Column, unit: String): Column = date_trunc(unit, ts)
 }

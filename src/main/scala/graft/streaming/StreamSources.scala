@@ -47,12 +47,6 @@ object StreamSources {
     r2.schema(schema).format(format).load(dir)
   }
 
-  /** Synthetic rate source for tests and load experiments: `timestamp`
-    * + monotonically increasing `value` at rowsPerSecond. */
-  def rateStream(spark: SparkSession, rowsPerSecond: Long): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond).load()
-
   /** Kafka-wire value decode: expand a binary/string `value` column
     * (the Kafka record payload shape) into typed columns via from_json.
     * The same plan consumes a real Kafka source —

@@ -28,4 +28,40 @@ class CheckpointsSpec extends SparkSpec {
     }
     assert(boom.getMessage === "thunk failure")
   }
+
+  test("parEager of no thunks returns Nil") {
+    assert(Checkpoints.parEager[Int]() === Nil)
+  }
+
+  test("parEager runs thunks on named daemon threads") {
+    val Seq(t) = Checkpoints.parEager(() => Thread.currentThread())
+    assert(t.isDaemon)
+    assert(t.getName.startsWith("graft-pareager-"), t.getName)
+  }
+
+  /** Poll `cond` every 10 ms for up to `seconds`; its last value. */
+  private def within(seconds: Double)(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + (seconds * 1e9).toLong
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+    cond
+  }
+
+  test("parEager's first failure cancels a sibling's running job") {
+    val tracker = spark.sparkContext.statusTracker
+    val boom = intercept[IllegalStateException] {
+      Checkpoints.parEager[Long](
+        () => {
+          // fail only once the sibling's job is on the executors
+          assert(within(30)(tracker.getActiveJobIds.nonEmpty))
+          throw new IllegalStateException("thunk failure")
+        },
+        () => spark.sparkContext.parallelize(1 to 4, 4)
+          .map { i => Thread.sleep(60000); i }.count())
+    }
+    assert(boom.getMessage === "thunk failure")
+    // the status store trails the scheduler by one listener-bus hop;
+    // allow it a moment, far less than the sibling's 60 s tasks
+    assert(within(5)(tracker.getActiveJobIds.isEmpty),
+      tracker.getActiveJobIds.mkString(","))
+  }
 }

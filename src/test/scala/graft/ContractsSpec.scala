@@ -1,0 +1,42 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-level contracts no runtime test would notice breaking: the
+  * query registry and its oracle map stay key-for-key in step, and the
+  * operators depend only on their inputs and the session's conf — no
+  * process-global switches on the product path. */
+class ContractsSpec extends AnyFunSuite {
+
+  test("every registered query has an oracle and every oracle a query") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries.diff(oracles).isEmpty, "queries without an oracle")
+    assert(oracles.diff(queries).isEmpty, "oracles without a query")
+  }
+
+  private val processGlobalReads =
+    """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r
+
+  test("operators read no system property or environment variable") {
+    val dir = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(dir), s"run from the repo root: $dir")
+    val files = Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size >= 10, "operator sources not found")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if processGlobalReads.findFirstIn(line).isDefined
+    } yield s"${dir.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the operator lint flags each forbidden read (anti-vacuity)") {
+    Seq("""sys.props.get("k")""", """sys.env.getOrElse("K", "")""",
+        """System.getProperty("k")""", """System.getenv("K")""")
+      .foreach(l => assert(processGlobalReads.findFirstIn(l).isDefined, l))
+  }
+}

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Relational
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class RelationalSpec extends SparkSpec {
@@ -16,10 +18,19 @@ class RelationalSpec extends SparkSpec {
       .head.getLong(1) === 2)
   }
 
+  /** The reference's batching primitive (producer/ProducerOperations
+    * .scala:131-149): a global row_number over a total order, then a
+    * range filter — single-partition at the window step, so it lives
+    * here only as the parity reference for withScalableOrdinal. */
+  private def ordinalSlice(df: DataFrame, orderCols: Seq[Column],
+      start: Long, n: Long): DataFrame =
+    df.withColumn("row_num", row_number().over(Window.orderBy(orderCols: _*)))
+      .filter(col("row_num").between(start + 1, start + n))
+
   test("ordinalSlice and withScalableOrdinal assign identical ordinals") {
     val df = (1 to 97).map(i => (i * 37 % 101, i)).toDF("k", "id")
     val order = Seq(col("k"), col("id"))
-    val a = Relational.ordinalSlice(df, order, 0, 1000)
+    val a = ordinalSlice(df, order, 0, 1000)
       .select("id", "row_num").as[(Int, Int)].collect().toMap
     val b = Relational.withScalableOrdinal(df, order)
       .select("id", "row_num").as[(Int, Long)].collect().toMap

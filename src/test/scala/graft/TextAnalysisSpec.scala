@@ -1046,6 +1046,23 @@ class TextAnalysisSpec extends SparkSpec {
     assert(localBat === distBat)
   }
 
+  test("fitBpeMerges local and distributed fits agree on words holding " +
+      "the line terminators U+0085, U+2028 and U+2029") {
+    // normalize() keeps these (Java \s excludes them) and a bare regex
+    // "." skips them, so both fits must frame them as symbols of their own
+    val docs = Seq(
+      (1L, "x\u2028y x\u2028y x\u2028y a\u0085b a\u0085b"),
+      (2L, "p\u2029q p\u2029q x\u2028y a\u0085b")).toDF("doc_id", "text")
+    val local = TextAnalysis.fitBpeMerges(docs, "text", 6)
+    val dist = TextAnalysis.fitBpeMerges(docs, "text", 6,
+      localFitWords = 0)
+    assert(dist === local)
+    assert(local.head.lhs === "x" && local.head.rhs === "\u2028")
+    assert(TextAnalysis.fitBpeMerges(docs, "text", 6, batchSize = 3,
+      localFitWords = 0) ===
+      TextAnalysis.fitBpeMerges(docs, "text", 6, batchSize = 3))
+  }
+
   test("batched fitBpeMerges: ranks stay strictly increasing across " +
       "under-filled rounds (the bpeTokenizeFast contract)") {
     val docs = Seq(
