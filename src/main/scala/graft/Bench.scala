@@ -13,21 +13,12 @@ object Bench {
     // (adjudicating one query's drift without 95 interleaved plans);
     // absent = the driver's full sweep, unchanged
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // a typo'd name must fail loudly, not print a valid-looking
-    // zero-query measurement
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: " +
-          unknown.mkString(", "))
-    }
+      .map(_.split(",").map(_.trim).toSeq)
+    val selected = SparkEntry.select(only)
     val spark = GraftSession.build("32")
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def runAll(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
+      selected.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // noop sink: materializes every output row (count() would let
         // Catalyst prune the projections and under-measure per-row work)

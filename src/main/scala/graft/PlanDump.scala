@@ -13,8 +13,8 @@ object PlanDump {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "plans/r18"
     val suffix = if (args.length > 2) args(2) else "_before"
-    val names = if (args.length > 3) args.drop(3).toSeq
-      else SparkEntry.queries.keys.toSeq
+    val selected = SparkEntry.select(
+      if (args.length > 3) Some(args.drop(3).toSeq) else None)
     val spark = GraftSession.build("32")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(outDir))
@@ -23,13 +23,13 @@ object PlanDump {
     // join rewrites, coalesced reads and ReusedExchange dedup the
     // initial plan cannot)
     val runFinal = sys.env.contains("SPARK_GRAFT_PLAN_FINAL")
-    names.foreach { n =>
+    selected.foreach { case (n, build) =>
       // building the frame runs any eager prefix (fits, iterative
       // loops ending in localCheckpoint) — the captured plan is the
       // final composed query exactly as Bench times it
       val txt =
         try {
-          val df = SparkEntry.queries(n)(spark, sfDir)
+          val df = build(spark, sfDir)
           if (runFinal) {
             // execute THIS QueryExecution (a .write would build its
             // own) so the AQE plan finalizes, then dump it — shows

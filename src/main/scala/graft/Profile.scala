@@ -17,8 +17,7 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
     require(args.nonEmpty, "usage: Profile <query> [query ...]")
-    val unknown = args.toSet.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val selected = SparkEntry.select(Some(args.toSeq))
     val spark = GraftSession.build("32")
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
@@ -49,8 +48,7 @@ object Profile {
         taskMs.addAndGet(t.taskInfo.duration)
       }
     })
-    args.foreach { n =>
-      val fn = SparkEntry.queries(n)
+    selected.foreach { case (n, fn) =>
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       // drain listener events from the warmup before zeroing
       // (listenerBus is private[spark]; a short settle is enough for

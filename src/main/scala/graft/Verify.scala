@@ -8,20 +8,12 @@ object Verify {
     // dev knob (same contract as Bench's SPARK_GRAFT_BENCH_ONLY):
     // comma-separated query names to dump in isolation while iterating
     // on one oracle; absent = the driver's full sweep, unchanged
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names not in SparkEntry.queries: " +
-          unknown.mkString(", "))
-    }
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .map(_.split(",").map(_.trim).toSeq))
     val spark = GraftSession.build("4")
     new java.io.File(outDir).mkdirs()
     var sinceGc = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -184,6 +184,10 @@ object TextAnalysis {
   private def bpeApplyMerge(seq: Column, a: String, b: String): Column =
     call_function("replace", seq, lit(s" $a  $b "), lit(s" $a$b "))
 
+  /** The local BPE fit's driver budget, in distinct words × merges:
+    * 12 merges (the registered queries' fit) over 2^20 words. */
+  val BpeLocalFitBudget: Long = 12L << 20
+
   /** Fit `numMerges` BPE merge rules over the corpus — the tokenizer-
     * prep artifact [[vocabulary]] stops short of (it ranks whole
     * tokens; a trained tokenizer is a merge SEQUENCE). Classic BPE
@@ -228,16 +232,20 @@ object TextAnalysis {
       .select(explode(TextFns.words(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    // SMALL-VOCAB FAST PATH (r19, guide §5 "the driver should do
-    // almost no data work" — but a FIT over bounded state is the
+    // SMALL-VOCAB FAST PATH (guide §5 "the driver should do almost no
+    // data work" — but a FIT over bounded state is the
     // budgets-map/fitSampleCap convention): the sequential argmax loop
     // below is one distributed job PER ROUND — numMerges driver
     // round-trips over a table that for most corpora is tiny (the
-    // distinct-word table, vocab-bounded). When it fits a fixed cap,
+    // distinct-word table, vocab-bounded). When it fits the cap,
     // collect it ONCE and run the identical loop over local state:
     // 1 job total instead of numMerges+2 (measured: the 12-merge fit
     // dropped ~1.3 s per query at sf0.1 across the 7-query BPE family;
     // profile showed 30 single-task jobs for text_bpe_ids before).
+    // Every local merge rescans every collected word, so the cap also
+    // holds words × numMerges within [[BpeLocalFitBudget]]: a near-cap
+    // vocabulary fitted with 32k merges would otherwise run ~10^10
+    // string scans on the driver.
     // The limit(cap+1) probe is the size gate: if it returns ≤ cap
     // rows it returned ALL rows and the local loop is exact; above
     // the cap (a 100 TB corpus has hundreds of millions of distinct
@@ -245,8 +253,10 @@ object TextAnalysis {
     // extra vocab-bounded agg job for the probe. Parity is
     // spec-pinned (local vs distributed fit, same merges bit-for-bit)
     // and every BPE oracle replays the merge sequence anyway.
-    val probe = wordFreq.limit(localFitWords + 1).collect()
-    if (probe.length <= localFitWords)
+    val cap = math.min(localFitWords.toLong,
+      BpeLocalFitBudget / math.max(numMerges, 1)).toInt
+    val probe = wordFreq.limit(cap + 1).collect()
+    if (probe.length <= cap)
       return fitBpeMergesLocal(
         probe.map(r => (r.getString(0), r.getLong(1))),
         numMerges, batchSize)

@@ -17,6 +17,15 @@ class ContractsSpec extends AnyFunSuite {
     assert(oracles.diff(queries).isEmpty, "oracles without a query")
   }
 
+  test("a registry with a repeated query name fails, naming it") {
+    import graft.registry.Query
+    val q = Query("dup_q", (s, _) => s.range(1).toDF(), "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      Query.requireUniqueNames(Seq(q, q.copy(oracleSql = "SELECT 2"))))
+    assert(e.getMessage.contains("dup_q"))
+    assert(Query.requireUniqueNames(Seq(q)) === Seq(q))
+  }
+
   private val processGlobalReads =
     """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r
 

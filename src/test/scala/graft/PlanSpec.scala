@@ -1,5 +1,6 @@
 package graft
 
+import graft.registry.Shared
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression tests: the properties SCALE.md promises must
@@ -60,7 +61,7 @@ class PlanSpec extends SparkSpec {
     import graft.operators.TextAnalysis
     val plan = TextAnalysis.winnowFingerprints(
         Tables(spark, sf, "documents"), "doc_id", "text",
-        SparkEntry.WinnowK, SparkEntry.WinnowW)
+        Shared.WinnowK, Shared.WinnowW)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(800))
     // the pair query shuffles exactly where it should: on the

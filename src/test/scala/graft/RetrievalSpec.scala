@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Retrieval, TextAnalysis}
+import graft.registry.Shared
 import org.apache.spark.sql.functions._
 
 class RetrievalSpec extends SparkSpec {
@@ -62,7 +63,7 @@ class RetrievalSpec extends SparkSpec {
   test("bm25Probe equals the full-scan bm25Scores on matched docs — " +
       "index and scan flavors cannot drift") {
     val corpus = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val terms = SparkEntry.Bm25Terms
+    val terms = Shared.Bm25Terms
     val index = Retrieval.invertedIndex(corpus, "doc_id", "text")
     val dl = Retrieval.docLengths(corpus, "doc_id", "text")
     val probe = Retrieval.bm25Probe(index, dl, terms, k = 1000000)
@@ -116,7 +117,7 @@ class RetrievalSpec extends SparkSpec {
     val corpus = Tables(spark, "/root/testdata/sf0.001", "documents")
     val index = Retrieval.invertedIndex(corpus, "doc_id", "text")
     val dl = Retrieval.docLengths(corpus, "doc_id", "text")
-    val top = Retrieval.bm25Probe(index, dl, SparkEntry.Bm25Terms, k = 10)
+    val top = Retrieval.bm25Probe(index, dl, Shared.Bm25Terms, k = 10)
       .orderBy(col("rank"))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
     assert(top.map(_._3).toSeq == (1L to 10L))

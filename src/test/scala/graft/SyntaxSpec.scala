@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Dedup
 import graft.syntax._
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ class SyntaxSpec extends SparkSpec {
     val docs = Seq((1L, "a b c"), (2L, "a  B C"), (3L, "x y z"))
       .toDF("doc_id", "text")
     assert(docs.dedupExactGroups("doc_id", "text").collect().toSet ===
-      graft.operators.Dedup.exactDupGroups(docs, "doc_id", "text")
+      Dedup.exactDupGroups(docs, "doc_id", "text")
         .collect().toSet)
     val events = (1 to 20).map(i => (i.toLong, i % 3, i.toDouble))
       .toDF("id", "k", "v")
@@ -132,5 +133,31 @@ class SyntaxSpec extends SparkSpec {
       .collect().toSet ===
       graft.operators.Similarity.matryoshkaTopK(mvecs,
         mvecs.filter(col("vec_id") < 1), 2, 2).collect().toSet)
+    val keys = (1 to 10).map(i => (i.toLong, s"r$i")).toDF("k", "tag")
+    val probe = Seq(2L, 5L, 40L).toDF("pk")
+    assert(keys.bloomSemiJoinTo(probe, "k", "pk", 3L, 1024L)
+      .collect().toSet ===
+      graft.operators.Relational.bloomSemiJoin(keys, probe, "k", "pk",
+        3L, 1024L).collect().toSet)
+    val evalDocs = Seq((9L, "a b c")).toDF("doc_id", "text")
+    assert(docs.contaminationAgainst(evalDocs, "doc_id", "text")
+      .collect().toSet ===
+      Dedup.contamination(docs, evalDocs, "doc_id", "text")
+        .collect().toSet)
+    assert(mvecs.knnTopK(mvecs.filter(col("vec_id") < 2), 2)
+      .collect().toSet ===
+      graft.operators.Similarity.bruteForceTopK(mvecs,
+        mvecs.filter(col("vec_id") < 2), 2).collect().toSet)
+    val legA2 = Seq((1L, 1L, 10L), (1L, 2L, 20L)).toDF("q_id", "rank", "n_id")
+    val legB2 = Seq((1L, 1L, 20L), (1L, 2L, 30L)).toDF("q_id", "rank", "n_id")
+    assert(legA2.rboAgainst(legB2, 2, 0.5).collect().toSet ===
+      graft.operators.Similarity.rboOverlap(legA2, legB2, 2, 0.5)
+        .collect().toSet)
+    val pieces = Seq("a", "b", "c", "ab").map(graft.operators.Unigram
+      .Piece(_, -1.0))
+    assert(docs.unigramTokenize("doc_id", "text", pieces, 2)
+      .collect().toSet ===
+      graft.operators.Unigram.tokenize(docs, "doc_id", "text", pieces, 2)
+        .collect().toSet)
   }
 }

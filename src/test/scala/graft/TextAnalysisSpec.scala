@@ -1063,6 +1063,57 @@ class TextAnalysisSpec extends SparkSpec {
       TextAnalysis.fitBpeMerges(docs, "text", 6, batchSize = 3))
   }
 
+  test("fitBpeMerges takes the distributed rounds once distinct words " +
+      "× merges exceed the local budget, with the local fit's merges") {
+    val docs = Seq(
+      (1L, "low lower newest"),
+      (2L, "low newer wide")).toDF("doc_id", "text")
+    val nWords = 5L
+    // far more merges than the corpus has pairs: both fits stop when
+    // every word is one symbol, so they must return the same sequence
+    val local = TextAnalysis.fitBpeMerges(docs, "text", 64)
+    assert(local.nonEmpty && local.size < 64)
+    val overBudget = (TextAnalysis.BpeLocalFitBudget / nWords + 1).toInt
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val dist =
+      try TextAnalysis.fitBpeMerges(docs, "text", overBudget)
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(dist === local)
+    // the distributed loop runs one recount job per merge (plus the
+    // exhausted round); the local path is the probe's collect alone
+    assert(jobs.get > local.size, s"${jobs.get} jobs")
+  }
+
+  test("fitBpeMerges local and distributed fits agree on generated " +
+      "words with line terminators and supplementary code points") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // U+0085/U+2028/U+2029 are not Java \s (they stay inside words);
+    // the supplementary and U+FF21 symbols order differently in UTF-16
+    // and UTF-8, which the tie-break must get right
+    val symbols = Seq("a", "b", "\u0085", "\u2028", "\u2029",
+      "\uD83D\uDE00", "\uD835\uDC00", "\uFF21")
+    val word = Gen.choose(1, 4).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(symbols)).map(_.mkString))
+    val text = Gen.choose(2, 6).flatMap(n =>
+      Gen.listOfN(n, word).map(_.mkString(" ")))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(2, text)) { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      TextAnalysis.fitBpeMerges(docs, "text", 4) ===
+        TextAnalysis.fitBpeMerges(docs, "text", 4, localFitWords = 0)
+    }
+    val result = Test.check(
+      Test.Parameters.default.withMinSuccessfulTests(25).withWorkers(1),
+      prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("batched fitBpeMerges: ranks stay strictly increasing across " +
       "under-filled rounds (the bpeTokenizeFast contract)") {
     val docs = Seq(
