@@ -14,9 +14,9 @@ private[graft] object Checkpoints {
     * frame was persist()ed) AND the executor-local blocks behind an
     * eager localCheckpoint. Dataset.unpersist alone only touches the
     * CacheManager — checkpoint blocks are RDD-level and are otherwise
-    * freed only when the ContextCleaner GCs the RDD (ADVICE r9: a
-    * long-running driver composing many iterative queries would
-    * accumulate executor-local storage between GCs). After this the
+    * freed only when the ContextCleaner GCs the RDD (a long-running
+    * driver composing many iterative queries would accumulate
+    * executor-local storage between GCs). After this the
     * frame is DEAD: a truncated lineage cannot recompute its blocks.
     *
     * Only the plan ROOT is matched — a checkpointed frame IS a root
@@ -42,34 +42,53 @@ private[graft] object Checkpoints {
     * bounded pool of daemon threads (`graft-pareager-N`) submits them
     * together; FIFO scheduling back-fills one job's straggler tail
     * with the next job's tasks. Results keep argument order; an empty
-    * list returns Nil. Each thunk runs under its own Spark job group,
-    * so the FIRST failure (in completion order) cancels the siblings:
+    * list returns Nil. Use ONLY for genuinely independent frames: a
+    * thunk must not read another thunk's result.
+    *
+    * Each thunk's jobs carry a job tag of their own ON TOP of the
+    * caller's local properties (job group, description, streaming
+    * batch id), so a cancel of the caller's group — a stopped
+    * streaming query cancels its run-id group — still reaches them.
+    * The FIRST failure (in completion order) cancels the siblings:
     * queued thunks never start, running ones are interrupted and their
-    * groups' jobs cancelled until every pool thread has exited — no
+    * tagged jobs cancelled until every pool thread has exited — no
     * sibling work runs on into the caller's next query — and then the
-    * failing thunk's own exception propagates. Use ONLY for genuinely
-    * independent frames: a thunk must not read another thunk's
-    * result. */
+    * failing thunk's own exception propagates. An interrupt of the
+    * calling thread is handled the same way and then rethrown as
+    * `InterruptedException`, with the thread's interrupt status set. */
   def parEager[T](thunks: (() => T)*): Seq[T] = {
     if (thunks.isEmpty) return Nil
     val sc = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
     val run = java.util.UUID.randomUUID()
-    val groups = thunks.indices.map(i => s"graft-pareager-$run-$i")
+    val tags = thunks.indices.map(i => s"graft-pareager-$run-$i")
+    // pool threads are created by this thread, so they inherit a copy
+    // of its local properties (Spark's InheritableThreadLocal)
     val pool = Executors.newFixedThreadPool(math.min(thunks.size, 4),
       (r: Runnable) => {
         val t = new Thread(r, s"graft-pareager-${threadIds.incrementAndGet()}")
         t.setDaemon(true)
         t
       })
-    def cancelAll(): Unit = sc.foreach(c => groups.foreach(c.cancelJobGroup))
+    def cancelAll(): Unit = sc.foreach(c => tags.foreach(c.cancelJobsWithTag))
+    // cancel, interrupt and join every thunk; an interrupt that arrives
+    // meanwhile is kept for the caller, not allowed to cut the join short
+    def abort(): Unit = {
+      pool.shutdownNow()
+      var interrupted = false
+      def joined(): Boolean =
+        try pool.awaitTermination(100, TimeUnit.MILLISECONDS)
+        catch { case _: InterruptedException => interrupted = true; false }
+      while (!joined()) cancelAll()
+      cancelAll() // jobs submitted just before a thread exited
+      if (interrupted) Thread.currentThread().interrupt()
+    }
     try {
       val done = new ExecutorCompletionService[T](pool)
-      val futs = thunks.zip(groups).map { case (t, g) =>
+      val futs = thunks.zip(tags).map { case (t, tag) =>
         done.submit(new Callable[T] {
           def call(): T = {
-            sc.foreach(_.setJobGroup(g, "Checkpoints.parEager",
-              interruptOnCancel = true))
+            sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
             t()
           }
         })
@@ -78,12 +97,13 @@ private[graft] object Checkpoints {
         try done.take().get()
         catch {
           case e: ExecutionException =>
-            pool.shutdownNow()
-            while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS))
-              cancelAll()
-            cancelAll() // jobs submitted just before a thread exited
+            abort()
             // surface the thunk's own exception, not the wrapper
             throw e.getCause
+          case e: InterruptedException =>
+            abort()
+            Thread.currentThread().interrupt()
+            throw e
         }
       }
       futs.map(_.get())

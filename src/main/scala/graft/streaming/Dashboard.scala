@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The dashboard's data access (SURVEY.md §2.1 S11), engine-side: the
   * reference polls output directories, sorts files by mtime and loads
@@ -34,23 +35,26 @@ object Dashboard {
 
   /** The newest `n` batches of a dataset, batch id attached. Only the
     * selected directories are ever read — true pruning by path, not a
-    * filter over the full dataset. */
+    * filter over the full dataset. A declared `schema` skips the
+    * footer-inference job a schema-less parquet read runs. */
   def latestBatches(spark: SparkSession, datasetDir: String,
-      n: Int): DataFrame = {
+      n: Int, schema: Option[StructType] = None): DataFrame = {
     val nums = latestBatchNumbers(spark, datasetDir, n)
     // zero-path spark.read.parquet() throws an opaque schema-inference
     // error — surface "no batches yet" instead (poll loops should gate
     // on latestBatchNumbers before reading)
     require(nums.nonEmpty,
       s"no batch_id=N partitions under $datasetDir — nothing written yet?")
-    spark.read.parquet(nums.map(b => s"$datasetDir/batch_id=$b"): _*)
+    schema.foldLeft(spark.read)(_ schema _)
+      .parquet(nums.map(b => s"$datasetDir/batch_id=$b"): _*)
   }
 
   /** Top locations by trip count over the latest `n` batches — the
-    * reference's bar-chart query (taxi_dashboard.py:170-197). */
+    * reference's bar-chart query (taxi_dashboard.py:170-197), read
+    * with the sink's declared aggregate schema. */
   def topLocations(spark: SparkSession, aggDir: String, n: Int,
       k: Int): DataFrame =
-    latestBatches(spark, aggDir, n)
+    latestBatches(spark, aggDir, n, Some(MultiSink.AggSchema))
       .groupBy(col("location_id"))
       .agg(sum(col("trip_count")).as("trip_count"))
       .orderBy(col("trip_count").desc, col("location_id"))
@@ -101,14 +105,14 @@ object Dashboard {
         topLocations(spark, dir, nBatches, topK).collect()
           .map(r => (String.valueOf(r.get(0)), r.getLong(1))).toSeq)
     }
-    // engine-side freshness (judge-r16 task 5): latest micro-batch per
+    // engine-side freshness: latest micro-batch per
     // query run from the StreamMetrics parquet log — batch id, rows,
     // wall and LAG vs now; the reference sidebar's last-refresh panel
     // (taxi_dashboard.py:83-104) backed by engine metrics instead of
     // file mtimes. ONLY a missing/empty log maps to the "no data yet"
     // convention; a genuine read error (corrupt parquet, permission,
     // schema drift) surfaces its message in the panel instead of
-    // masquerading as an empty log (ADVICE r17)
+    // masquerading as an empty log
     val freshness = metricsDir.map { dir =>
       val title = "stream freshness"
       // classify by the read's OWN failure, not a local-FS pre-check:
@@ -118,7 +122,7 @@ object Dashboard {
       // yet (Spark's PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA) → the
       // "no data yet" convention; anything else is a genuine error
       // and surfaces its message instead of masquerading as an empty
-      // log (ADVICE r17).
+      // log.
       def noDataYet(e: Throwable): Boolean = e match {
         case a: org.apache.spark.sql.AnalysisException =>
           val c = Option(a.getCondition).getOrElse("")

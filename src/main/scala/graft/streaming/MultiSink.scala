@@ -1,8 +1,11 @@
 package graft.streaming
 
+import graft.operators.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** The consumer pipeline (SURVEY.md §3.2), idiomatic and idempotent:
   * one checkpointed foreachBatch sink writing four datasets per
@@ -16,6 +19,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    mode("overwrite") — a replayed micro-batch overwrites its own
   *    directory instead of appending duplicates (reference appends,
   *    StreamProcessor.scala:156-184, duplicate-prone on recovery).
+  *
+  * Per micro-batch the fixed cost is one materialization plus the
+  * slowest of the four writes: one job caches the stamped batch and
+  * counts it (a count of 0 writes nothing), the tagged counts are
+  * computed once into one partition, and the four writes — one part
+  * file per aggregate — run together through `Checkpoints.parEager`.
+  * A failed write cancels the others and fails the batch; the replay
+  * overwrites whatever the cancelled writes left.
   */
 object MultiSink {
 
@@ -41,7 +52,7 @@ object MultiSink {
       // not a wall-clock stamp, so a replayed batch overwrites its own
       // marker — the sink family's idempotency contract
       debugDir: Option[String] = None,
-      // engine-side observability (judge-r16 task 5): when set, the
+      // engine-side observability: when set, the
       // query is named and a name-filtered StreamingQueryListener
       // appends one (batch_id, trigger_ts, rows, wall_ms, state_rows)
       // row per micro-batch to this parquet dir — what the dashboard's
@@ -72,6 +83,16 @@ object MultiSink {
     }
   }
 
+  /** Schema of `pickup_agg`, `dropoff_agg` and `combined_agg` as the
+    * sink writes them, for readers that declare it instead of paying a
+    * footer-inference job per read. Every column is nullable, as Spark
+    * writes file columns. */
+  val AggSchema: StructType = StructType(Seq(
+    StructField("location_id", StringType),
+    StructField("trip_count", LongType),
+    StructField("aggregation_type", StringType),
+    StructField("batch_id", StringType)))
+
   /** Console sink (SURVEY §2.1 S6) — the reference's debug output
     * (consumer/StreamProcessor.scala:199-202), wrapped so pipelines can
     * tee a stream to the terminal with the same trigger cadence as the
@@ -90,10 +111,9 @@ object MultiSink {
   /** The S8 debug side-channel: append a bounded preview block for a
     * batch — driver-side, ≤ 5 rows collected, content truncated. The
     * reference's shape (header / preview / footer per batch). */
-  private def appendDebugPreview(batch: DataFrame, batchId: Long,
+  private def appendDebugPreview(batch: DataFrame, n: Long, batchId: Long,
       debugDir: String): Unit = {
     val rows = batch.limit(5).toJSON.collect()
-    val n = batch.count()
     val preview =
       if (rows.isEmpty) "EMPTY BATCH - no rows to write"
       else rows.mkString("\n").take(1000) +
@@ -150,29 +170,39 @@ object MultiSink {
         if (cfg.drainOnce) Trigger.AvailableNow()
         else Trigger.ProcessingTime(s"${cfg.triggerSeconds} seconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.isEmpty)
-          cfg.debugDir.foreach(writeEmptyMarker(batch, batchId, _))
-        else {
-          val repaired = StreamOps.repairNullTs(batch, cfg.tsCols)
-          val stamped = StreamOps.stampBatchMeta(repaired, batchId)
-          // one pass over the source for all four sinks
-          stamped.persist()
-          try {
-            cfg.debugDir.foreach(appendDebugPreview(stamped, batchId, _))
-            write(stamped, "raw", batchId)
+        val repaired = StreamOps.repairNullTs(batch, cfg.tsCols)
+        val stamped = StreamOps.stampBatchMeta(repaired, batchId)
+        // the batch's one scan of its source: the count materializes the
+        // cache every write below reads. An RDD count is one job, where
+        // Dataset.count's global aggregate adds a shuffle and, under AQE,
+        // a job for the cache stage and one for the map stage
+        stamped.persist()
+        try {
+          val n = stamped.rdd.count()
+          if (n == 0L)
+            cfg.debugDir.foreach(writeEmptyMarker(batch, batchId, _))
+          else {
+            cfg.debugDir.foreach(appendDebugPreview(stamped, n, batchId, _))
+            // one row per key and tag, computed once for the three
+            // writes. The batch has one partition per input file; counted
+            // in one partition there is no shuffle, and each aggregate
+            // dataset gets one file. A lazy local checkpoint keeps the
+            // result for the other two writes without a job of its own
+            // (a persisted aggregate adds one per write under AQE)
             val counts = StreamOps.taggedKeyCounts(
-              stamped, cfg.keyA, cfg.tagA, cfg.keyB, cfg.tagB)
+              stamped.coalesce(1), cfg.keyA, cfg.tagA, cfg.keyB, cfg.tagB)
               .withColumn("batch_id", lit(StreamOps.formatBatchId(batchId)))
-            counts.persist()
-            try {
-              write(counts.filter(col("aggregation_type") === cfg.tagA),
-                "pickup_agg", batchId)
-              write(counts.filter(col("aggregation_type") === cfg.tagB),
-                "dropoff_agg", batchId)
-              write(counts, "combined_agg", batchId)
-            } finally counts.unpersist()
-          } finally stamped.unpersist()
-        }
+              .coalesce(1).localCheckpoint(eager = false)
+            try Checkpoints.parEager(
+              () => write(stamped, "raw", batchId),
+              () => write(counts.filter(col("aggregation_type") === cfg.tagA),
+                "pickup_agg", batchId),
+              () => write(counts.filter(col("aggregation_type") === cfg.tagB),
+                "dropoff_agg", batchId),
+              () => write(counts, "combined_agg", batchId))
+            finally Checkpoints.releaseIntermediate(counts)
+          }
+        } finally stamped.unpersist()
         ()
       }
       .start()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Engine-side streaming observability (judge-r16 task 5): a
+/** Engine-side streaming observability: a
   * [[StreamingQueryListener]] that records one row per micro-batch to
   * a parquet metrics log — (query_id, run_id, name, batch_id,
   * trigger_ts, rows, wall_ms, state_rows) — so the dashboard's
@@ -30,9 +30,9 @@ object StreamMetrics {
 
   /** One micro-batch observation (the progress event's stable core).
     * `rows` is the progress event's numInputRows — Spark's cumulative
-    * source-scan counter for the trigger (the Spark-UI number), so a
-    * sink that probes the batch before processing (MultiSink's
-    * isEmpty) reports shipped rows + probe rows, not exactly shipped.
+    * source-scan counter for the trigger (the Spark-UI number). It
+    * equals the rows shipped when the sink scans its source once, as
+    * MultiSink does; a sink that re-reads the batch counts each scan.
     */
   final case class BatchMetric(query_id: String, run_id: String,
       name: String, batch_id: Long, trigger_ts: java.sql.Timestamp,
@@ -47,9 +47,9 @@ object StreamMetrics {
     * listener whose query dies before its first progress event still
     * detaches instead of accumulating idle under repeated attaches; an
     * unfiltered listener never detaches on a query it did not record
-    * (ADVICE r17 — detaching on arbitrary terminations silently
-    * removed a listener observing several queries when the first
-    * unrelated one stopped). The residual case: an UNFILTERED
+    * (detaching on arbitrary terminations would silently remove a
+    * listener observing several queries when the first unrelated one
+    * stopped). The residual case: an UNFILTERED
     * detachOnTerminate listener whose only query fails before any
     * progress stays attached (it cannot tell that query from an
     * unrelated one) — prefer onlyName when detachOnTerminate matters,
@@ -98,7 +98,7 @@ object StreamMetrics {
           event: StreamingQueryListener.QueryTerminatedEvent): Unit =
         // detach ONLY on a query this listener claimed — an unfiltered
         // listener observing several queries must not vanish when the
-        // first unrelated one stops (ADVICE r17)
+        // first unrelated one stops
         if (detachOnTerminate && myIds.contains(event.id))
           spark.streams.removeListener(this)
     }

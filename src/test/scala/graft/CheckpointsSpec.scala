@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Checkpoints
 
-/** The concurrent-pin helper behind the r19 guide-§2.6 overlaps
+/** The concurrent-pin helper behind the guide-§2.6 overlaps
   * (lshRecallReport truth/cand, the recall facets, the layout
-  * witnesses): results must keep argument order, thunks must actually
-  * run Spark jobs safely off-thread, and a failing thunk must surface
-  * its OWN exception. */
+  * witnesses) and MultiSink's four writes: results must keep argument
+  * order, thunks must actually run Spark jobs safely off-thread, a
+  * failing thunk must surface its OWN exception, and neither a failure
+  * nor an interrupt of the caller may leave a thunk's job running. */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,13 +40,6 @@ class CheckpointsSpec extends SparkSpec {
     assert(t.getName.startsWith("graft-pareager-"), t.getName)
   }
 
-  /** Poll `cond` every 10 ms for up to `seconds`; its last value. */
-  private def within(seconds: Double)(cond: => Boolean): Boolean = {
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
-    cond
-  }
-
   test("parEager's first failure cancels a sibling's running job") {
     val tracker = spark.sparkContext.statusTracker
     val boom = intercept[IllegalStateException] {
@@ -61,6 +55,57 @@ class CheckpointsSpec extends SparkSpec {
     assert(boom.getMessage === "thunk failure")
     // the status store trails the scheduler by one listener-bus hop;
     // allow it a moment, far less than the sibling's 60 s tasks
+    assert(within(5)(tracker.getActiveJobIds.isEmpty),
+      tracker.getActiveJobIds.mkString(","))
+  }
+
+  test("parEager's caller interrupted: thunk jobs cancelled, " +
+      "InterruptedException rethrown with the interrupt status kept") {
+    val tracker = spark.sparkContext.statusTracker
+    @volatile var outcome: Either[Throwable, Seq[Long]] = Right(Nil)
+    @volatile var flagKept = false
+    val caller = new Thread(() => {
+      try outcome = Right(Checkpoints.parEager[Long](
+        () => spark.sparkContext.parallelize(1 to 4, 4)
+          .map { i => Thread.sleep(60000); i.toLong }.count()))
+      catch { case e: Throwable => outcome = Left(e) }
+      flagKept = Thread.currentThread().isInterrupted
+    }, "pareager-interrupt-caller")
+    caller.setDaemon(true)
+    caller.start()
+    assert(within(30)(tracker.getActiveJobIds.nonEmpty),
+      "the thunk's job never started")
+    caller.interrupt()
+    caller.join(30000)
+    assert(!caller.isAlive, "parEager did not return after the interrupt")
+    assert(outcome.left.toOption.exists(_.isInstanceOf[InterruptedException]),
+      s"want InterruptedException, got $outcome")
+    assert(flagKept, "the caller's interrupt status was cleared")
+    assert(within(5)(tracker.getActiveJobIds.isEmpty),
+      tracker.getActiveJobIds.mkString(","))
+  }
+
+  test("parEager's thunks keep the caller's job group, so cancelling " +
+      "the caller's group reaches their jobs") {
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    val group = s"pareager-caller-${java.util.UUID.randomUUID()}"
+    @volatile var outcome: Either[Throwable, Seq[Long]] = Right(Nil)
+    val caller = new Thread(() => {
+      sc.setJobGroup(group, "caller", interruptOnCancel = true)
+      try outcome = Right(Checkpoints.parEager[Long](
+        () => sc.parallelize(1 to 4, 4)
+          .map { i => Thread.sleep(60000); i.toLong }.count()))
+      catch { case e: Throwable => outcome = Left(e) }
+    }, "pareager-group-caller")
+    caller.setDaemon(true)
+    caller.start()
+    assert(within(30)(tracker.getJobIdsForGroup(group).nonEmpty),
+      "the thunk's job does not carry the caller's job group")
+    sc.cancelJobGroup(group)
+    caller.join(30000)
+    assert(!caller.isAlive, "parEager did not return after the cancel")
+    assert(outcome.isLeft, s"want the cancelled job's failure, got $outcome")
     assert(within(5)(tracker.getActiveJobIds.isEmpty),
       tracker.getActiveJobIds.mkString(","))
   }

@@ -2,13 +2,14 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level contracts no runtime test would notice breaking: the
   * query registry and its oracle map stay key-for-key in step, and the
   * operators depend only on their inputs and the session's conf — no
-  * process-global switches on the product path. */
-class ContractsSpec extends AnyFunSuite {
+  * process-global switches on the product path; and a schema the
+  * program declares for its own output is the one Spark infers from
+  * it. */
+class ContractsSpec extends SparkSpec {
 
   test("every registered query has an oracle and every oracle a query") {
     val queries = SparkEntry.queries.keySet
@@ -47,5 +48,32 @@ class ContractsSpec extends AnyFunSuite {
     Seq("""sys.props.get("k")""", """sys.env.getOrElse("K", "")""",
         """System.getProperty("k")""", """System.getenv("K")""")
       .foreach(l => assert(processGlobalReads.findFirstIn(l).isDefined, l))
+  }
+
+  test("MultiSink's declared aggregate schema is the one Spark infers " +
+      "from a written aggregate batch") {
+    import graft.streaming.{MultiSink, Replay, StreamSources}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_agg_schema").toString
+    val events = (1 to 10).map(i => (i.toLong,
+      java.sql.Timestamp.valueOf(f"2024-01-01 00:00:$i%02d"), (i % 3).toLong,
+      if (i % 2 == 0) "click" else "view", i * 1.5, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val prepared = Replay.prepare(events, Seq(col("ts"), col("event_id")))
+    Replay.writeBatches(prepared, s"$base/incoming", 10, 1)
+    prepared.unpersist()
+    val q = MultiSink.start(
+      StreamSources.fileStream(spark, s"$base/incoming/*"),
+      MultiSink.Config(outDir = s"$base/processed",
+        checkpointDir = s"$base/checkpoint",
+        keyA = "user_id", tagA = "pickup_location",
+        keyB = "event_type", tagB = "dropoff_location", drainOnce = true))
+    assert(q.awaitTermination(120000), "drain did not self-terminate")
+    Seq("pickup_agg", "dropoff_agg", "combined_agg").foreach { d =>
+      val inferred = spark.read.parquet(s"$base/processed/$d/batch_id=0")
+        .schema
+      assert(inferred === MultiSink.AggSchema, d)
+    }
   }
 }

@@ -21,4 +21,11 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Poll `cond` every 10 ms for up to `seconds`; its last value. */
+  protected def within(seconds: Double)(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + (seconds * 1e9).toLong
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+    cond
+  }
 }

@@ -1,9 +1,29 @@
 package graft
 
-import graft.streaming.{Dashboard, MultiSink, Replay, StreamSources}
+import graft.streaming.{Dashboard, MultiSink, Replay, StreamOps,
+  StreamSources}
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{BaseRelation,
+  CreatableRelationProvider}
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.apache.spark.sql.types.StructType
+
+/** A write format whose tasks block for 60 s: a trigger that is still
+  * writing when the spec stops its query. */
+class SlowWriteFormat extends CreatableRelationProvider {
+  override def createRelation(ctx: SQLContext, mode: SaveMode,
+      parameters: Map[String, String], data: DataFrame): BaseRelation = {
+    data.rdd.foreachPartition(_ => Thread.sleep(60000))
+    val s = data.schema
+    new BaseRelation {
+      def sqlContext: SQLContext = ctx
+      def schema: StructType = s
+    }
+  }
+}
 
 /** End-to-end producer → file-drop → consumer pipeline under test:
   * the reference's three-process flow in-process, plus the idempotency
@@ -18,16 +38,29 @@ class StreamPipelineSpec extends SparkSpec {
       s"""{"k":$i}""")
   }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
 
+  private def sinkConfig(work: String) = MultiSink.Config(
+    outDir = s"$work/processed", checkpointDir = s"$work/checkpoint",
+    keyA = "user_id", tagA = "pickup_location",
+    keyB = "event_type", tagB = "dropoff_location",
+    triggerSeconds = 1L)
+
+  private val Datasets =
+    Seq("raw", "pickup_agg", "dropoff_agg", "combined_agg")
+
+  /** `n` events in `n / size` drop files of `size` rows each. */
+  private def dropEvents(incoming: String, n: Int, size: Int): Unit = {
+    val prepared = Replay.prepare(mkEvents(n),
+      Seq(col("ts"), col("event_id")))
+    Replay.writeBatches(prepared, incoming, size, n / size)
+    prepared.unpersist()
+  }
+
   private def runPipeline(incoming: String, work: String): Long = {
     // one file per micro-batch (the reference's pacing) -> batch ids
     // advance per dropped file
     val stream = StreamSources.fileStream(spark, s"$incoming/*",
       maxFilesPerTrigger = 1)
-    val q = MultiSink.start(stream, MultiSink.Config(
-      outDir = s"$work/processed", checkpointDir = s"$work/checkpoint",
-      keyA = "user_id", tagA = "pickup_location",
-      keyB = "event_type", tagB = "dropoff_location",
-      triggerSeconds = 1L))
+    val q = MultiSink.start(stream, sinkConfig(work))
     q.processAllAvailable()
     q.stop()
     spark.read.parquet(s"$work/processed/raw/batch_id=*").count()
@@ -296,11 +329,8 @@ class StreamPipelineSpec extends SparkSpec {
     prepared.unpersist()
     val stream = StreamSources.fileStream(spark, s"$base/incoming/*",
       maxFilesPerTrigger = 1)
-    val q = MultiSink.start(stream, MultiSink.Config(
-      outDir = s"$base/processed", checkpointDir = s"$base/checkpoint",
-      keyA = "user_id", tagA = "pickup_location",
-      keyB = "event_type", tagB = "dropoff_location",
-      triggerSeconds = 1L, debugDir = Some(s"$base/debug")))
+    val q = MultiSink.start(stream,
+      sinkConfig(base).copy(debugDir = Some(s"$base/debug")))
     try {
       q.processAllAvailable()
       // now drop an EMPTY file -> one zero-row micro-batch
@@ -321,9 +351,14 @@ class StreamPipelineSpec extends SparkSpec {
     val marker = new String(Files.readAllBytes(java.nio.file.Paths.get(
       s"$base/debug/${markers.head}")), "UTF-8")
     assert(marker.contains("was empty"))
-    // the data path is unaffected by the side-channel
+    // the data path is unaffected by the side-channel, and the empty
+    // batch wrote no dataset
     assert(spark.read.parquet(s"$base/processed/raw/batch_id=*")
       .count() === 10L)
+    Datasets.foreach { d =>
+      assert(new java.io.File(s"$base/processed/$d/batch_id=0").isDirectory, d)
+      assert(!new java.io.File(s"$base/processed/$d/batch_id=1").exists, d)
+    }
   }
 
   test("StreamMetrics: one metrics row per micro-batch with sane " +
@@ -337,11 +372,8 @@ class StreamPipelineSpec extends SparkSpec {
     val stream = StreamSources.fileStream(spark, s"$base/incoming/*",
       maxFilesPerTrigger = 1)
     val metricsDir = s"$base/metrics"
-    val q = MultiSink.start(stream, MultiSink.Config(
-      outDir = s"$base/processed", checkpointDir = s"$base/checkpoint",
-      keyA = "user_id", tagA = "pickup_location",
-      keyB = "event_type", tagB = "dropoff_location",
-      triggerSeconds = 1L, metricsDir = Some(metricsDir)))
+    val q = MultiSink.start(stream,
+      sinkConfig(base).copy(metricsDir = Some(metricsDir)))
     try q.processAllAvailable() finally q.stop()
     // listener events are async on the bus — poll until the three
     // per-batch appends land (bounded)
@@ -356,11 +388,10 @@ class StreamPipelineSpec extends SparkSpec {
     // exactly one row per micro-batch (3 files × maxFilesPerTrigger=1)
     assert(m.map(_._1).toSeq === Seq(0L, 1L, 2L))
     // numInputRows is Spark's source-scan counter (what the UI shows):
-    // MultiSink's isEmpty probe re-scans 1 row per trigger, so each
-    // 20-row batch reports 21 — at least the shipped rows, bounded by
-    // shipped + probe
-    assert(m.map(_._2).forall(r => r >= 20L && r <= 21L),
-      s"per-batch rows in [20, 21]: ${m.map(_._2).toSeq}")
+    // MultiSink scans each batch's source once, so it is exactly the
+    // rows shipped
+    assert(m.map(_._2).forall(_ === 20L),
+      s"per-batch rows: ${m.map(_._2).toSeq}")
     assert(m.forall(_._3 > 0L), "per-batch wall must be positive")
     assert(m.forall(_._4 === 0L)) // stateless sink: no state rows
     assert(m.forall(_._5.startsWith("graft_multisink_")))
@@ -394,9 +425,9 @@ class StreamPipelineSpec extends SparkSpec {
   test("freshness panel failure classification: empty/missing dirs " +
       "(any path scheme) read as 'no metrics yet'; a corrupt log " +
       "surfaces the read error instead of masquerading as empty") {
-    // positive control for the ADVICE-r17 fix: the panel classifies
-    // the Spark read's OWN failure, so the three outcomes must stay
-    // distinguishable — and the URI-schemed case pins that no local
+    // positive control: the panel classifies the Spark read's OWN
+    // failure, so the three outcomes must stay distinguishable — and
+    // the URI-schemed case pins that no local
     // java.io.File pre-check sneaks back in (it would misread every
     // file:/-schemed dir as forever-empty)
     val base = Files.createTempDirectory("graft_fresh_cls").toString
@@ -425,7 +456,7 @@ class StreamPipelineSpec extends SparkSpec {
   test("SOAK: 100 sustained micro-batches through the compose " +
       "pipeline — no metrics drop, wall time does not trend up, " +
       "stateful leg's state_rows plateaus at the key domain") {
-    // judge-r17 task 5: the per-batch metrics pin proves one row per
+    // the per-batch metrics pin proves one row per
     // batch, but nothing pinned that LAG STAYS BOUNDED under
     // sustained load — a state leak or accumulating-file pathology
     // shows up as monotonically growing per-batch wall (the consumer
@@ -554,5 +585,119 @@ class StreamPipelineSpec extends SparkSpec {
       assert(m.map(_._1).max === 2L,
         s"stateful query must report state rows: ${m.toSeq}")
     } finally StreamMetrics.detach(spark, listener)
+  }
+
+  /** Part files directly under a batch directory. */
+  private def partFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .count(_.getName.startsWith("part-"))
+
+  test("one 500-row drop: fewer jobs than the probe-and-serial sink's " +
+      "8, one file per aggregate, aggregates equal a recount of raw") {
+    val base = Files.createTempDirectory("graft_sink_shape").toString
+    dropEvents(s"$base/incoming", 500, 500)
+    // jobs per job group: the sink's jobs carry the query's run id
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[
+      String, java.util.concurrent.atomic.AtomicInteger]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(g =>
+          jobsByGroup.computeIfAbsent(g,
+            _ => new java.util.concurrent.atomic.AtomicInteger())
+            .incrementAndGet())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val cfg = sinkConfig(base)
+    val q = MultiSink.start(StreamSources.fileStream(spark,
+      s"$base/incoming/*", maxFilesPerTrigger = 1), cfg)
+    try q.processAllAvailable() finally q.stop()
+    Thread.sleep(500) // async bus: let the trigger's job events land
+    spark.sparkContext.removeSparkListener(listener)
+    val out = s"$base/processed"
+    assert(new java.io.File(out).list().sorted.toSeq === Datasets.sorted)
+    Seq("pickup_agg", "dropoff_agg", "combined_agg").foreach { d =>
+      assert(partFiles(s"$out/$d/batch_id=0") === 1, d)
+    }
+    val jobs = Option(jobsByGroup.get(q.runId.toString)).map(_.get).getOrElse(0)
+    assert(jobs > 0 && jobs < 8, s"jobs for the one trigger: $jobs")
+    val raw = spark.read.parquet(s"$out/raw/batch_id=0")
+    assert(raw.count() === 500L)
+    val recount = StreamOps.taggedKeyCounts(raw, cfg.keyA, cfg.tagA,
+      cfg.keyB, cfg.tagB)
+      .withColumn("batch_id", lit(StreamOps.formatBatchId(0L)))
+    def same(d: String, expected: DataFrame): Unit = {
+      val got = spark.read.parquet(s"$out/$d/batch_id=0")
+      assert(got.columns.toSeq === expected.columns.toSeq, d)
+      assert(got.exceptAll(expected).isEmpty, s"$d has rows raw lacks")
+      assert(expected.exceptAll(got).isEmpty, s"$d lacks rows of raw")
+    }
+    same("pickup_agg", recount.filter(col("aggregation_type") === cfg.tagA))
+    same("dropoff_agg", recount.filter(col("aggregation_type") === cfg.tagB))
+    same("combined_agg", recount)
+  }
+
+  test("a failed write fails the batch and leaves no job running; a " +
+      "restart from the checkpoint writes every event exactly once") {
+    val base = Files.createTempDirectory("graft_sink_fail").toString
+    dropEvents(s"$base/incoming", 60, 20)
+    // a regular file where the combined_agg directory belongs: only
+    // that one of the four writes fails
+    val blocker = new java.io.File(s"$base/processed/combined_agg")
+    blocker.getParentFile.mkdirs()
+    Files.write(blocker.toPath, "not a directory".getBytes("UTF-8"))
+    val cfg = sinkConfig(base)
+    def start() = MultiSink.start(StreamSources.fileStream(spark,
+      s"$base/incoming/*", maxFilesPerTrigger = 1), cfg)
+    val q = start()
+    val e = try intercept[StreamingQueryException](q.processAllAvailable())
+      finally q.stop()
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists(c => String.valueOf(c.getMessage)
+      .contains("processed/combined_agg")), chain.mkString("\n"))
+    val tracker = spark.sparkContext.statusTracker
+    assert(within(5)(tracker.getActiveJobIds.isEmpty),
+      tracker.getActiveJobIds.mkString(","))
+
+    assert(blocker.delete())
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    val out = s"$base/processed"
+    val raw = spark.read.parquet(s"$out/raw/batch_id=*")
+    assert(raw.count() === 60L)
+    assert(raw.select("event_id").distinct().count() === 60L)
+    assert(raw.select("event_id").as[Long].collect().toSet ===
+      (1L to 60L).toSet)
+    def perBatch(d: String, value: org.apache.spark.sql.Column) =
+      spark.read.parquet(s"$out/$d/batch_id=*")
+        .select(regexp_extract(input_file_name(), "batch_id=(\\d+)", 1)
+          .cast("long").as("b"), value.as("v"))
+        .groupBy("b").agg(sum("v").as("v")).as[(Long, Long)]
+        .collect().toMap
+    val rows = perBatch("raw", lit(1L))
+    assert(rows.keySet === Set(0L, 1L, 2L))
+    assert(perBatch("pickup_agg", col("trip_count")) === rows)
+    assert(perBatch("dropoff_agg", col("trip_count")) === rows)
+    assert(perBatch("combined_agg", col("trip_count")) ===
+      rows.map { case (b, n) => b -> 2 * n })
+  }
+
+  test("stop() during a trigger whose writes are still running leaves " +
+      "no Spark job active") {
+    val base = Files.createTempDirectory("graft_sink_stop").toString
+    dropEvents(s"$base/incoming", 20, 20)
+    val q = MultiSink.start(StreamSources.fileStream(spark,
+      s"$base/incoming/*", maxFilesPerTrigger = 1),
+      sinkConfig(base).copy(format = classOf[SlowWriteFormat].getName))
+    val tracker = spark.sparkContext.statusTracker
+    try {
+      // all four writes are blocked in their 60 s tasks
+      assert(within(60)(tracker.getActiveJobIds.length >= 4),
+        s"active jobs: ${tracker.getActiveJobIds.mkString(",")}")
+    } finally q.stop()
+    assert(within(5)(tracker.getActiveJobIds.isEmpty),
+      tracker.getActiveJobIds.mkString(","))
   }
 }
