@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for stress sweeps past the driver's testdata
@@ -72,9 +72,22 @@ object ScaleGen {
           }.drop("__copy")
         }
       out.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name.parquet")
-      val n = spark.read.parquet(s"$outDir/$name.parquet").count()
-      println(s"SCALEGEN $name rows=$n")
+      println(s"SCALEGEN $name rows=${checkedCount(spark, outDir, name)}")
     }
     spark.stop()
+  }
+
+  /** Row count of the table `name` written under `dir`, read with its
+    * declared schema. Fails, naming the table, if the schema Spark
+    * infers from the written file is not the one [[Tables]] declares:
+    * a declared read of such a file would silently read a missing
+    * column as null, so every generated table must take the same read
+    * path as the fixtures. */
+  def checkedCount(spark: SparkSession, dir: String, name: String): Long = {
+    val written = spark.read.parquet(s"$dir/$name.parquet").schema
+    require(written == Tables.schema(name),
+      s"ScaleGen: $name was written as ${written.toDDL}, but Tables " +
+        s"declares ${Tables.schema(name).toDDL}")
+    Tables(spark, dir, name).count()
   }
 }

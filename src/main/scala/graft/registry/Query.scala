@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - every computed column aliased identically on both sides;
   *  - integer-ish outputs cast to BIGINT on both sides (Spark int vs
   *    DuckDB BIGINT would hash-mismatch);
-  *  - timestamps emitted as formatted strings (events.ts is
-  *    nanosecond-precision parquet; Spark truncates to micros — raw
-  *    timestamp output would differ);
+  *  - timestamps emitted as formatted strings (the fixtures' timestamps
+  *    are timestamp_ntz in Spark and TIMESTAMP in DuckDB — raw timestamp
+  *    output would differ in type);
   *  - double aggregates rounded at the edge; all hashing is md5 so both
   *    engines compute identical signatures;
   *  - DuckDB regexp_replace needs the 'g' flag to match Spark's

@@ -29,9 +29,13 @@ object ProducerMain {
   def produce(spark: SparkSession, c: GraftConfig,
       bus: Option[EventBus] = None): Long = {
     def d(k: String) = c.str(k, GraftConfig.Defaults(k))
-    val events = Tables(spark, d("graft.producer.data.sourceDir"),
+    // the source is a file from outside the program (Tables.foreign);
+    // its columns are cast to the bus's event schema, so a `ts` read as
+    // timestamp_ntz publishes the same rows as one read as timestamp
+    val events = Tables.foreign(spark, d("graft.producer.data.sourceDir"),
         d("graft.producer.data.table"))
-      .select(StreamSources.eventSchema.fieldNames.map(col): _*)
+      .select(StreamSources.eventSchema.fields.map(f =>
+        col(f.name).cast(f.dataType)): _*)
     val prepared = Replay.prepare(events, Seq(col("ts"), col("event_id")))
     val total = prepared.count()
     val confBatch = d("graft.producer.data.batchSize").toLong
@@ -113,7 +117,7 @@ object ConsumerMain {
       // across runs, so after a checkpoint wipe (batch ids restart at
       // 0) a stale prior-run row would satisfy the global max
       // immediately and the final batches' async appends could still
-      // drop — the exact loss this loop prevents (ADVICE r17)
+      // drop — the exact loss this loop prevents
       val runId = q.lastProgress.runId.toString
       val deadline = System.currentTimeMillis() + 30000
       def seen(): Long =

@@ -58,7 +58,7 @@ object StreamDemo {
 
     // --- producer: slice the source table into ordered JSON batch drops
     // (the SAME body the standalone ProducerMain container runs)
-    val total = Tables(spark, sfDir, table).count()
+    val total = Tables.foreign(spark, sfDir, table).count()
     val nBatches = ProducerMain.produce(spark, c)
     println(s"PRODUCED_BATCHES=$nBatches")
 

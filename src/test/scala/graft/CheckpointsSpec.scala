@@ -8,7 +8,8 @@ import graft.operators.Checkpoints
   * witnesses) and MultiSink's four writes: results must keep argument
   * order, thunks must actually run Spark jobs safely off-thread, a
   * failing thunk must surface its OWN exception, and neither a failure
-  * nor an interrupt of the caller may leave a thunk's job running. */
+  * nor an interrupt of the caller may leave a thunk's job running.
+  * Releasing a checkpoint frees whatever blocks it holds. */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -108,5 +109,35 @@ class CheckpointsSpec extends SparkSpec {
     assert(outcome.isLeft, s"want the cancelled job's failure, got $outcome")
     assert(within(5)(tracker.getActiveJobIds.isEmpty),
       tracker.getActiveJobIds.mkString(","))
+  }
+
+  private def lazyCheckpoint() =
+    spark.range(10).toDF("x").coalesce(1).localCheckpoint(eager = false)
+
+  private def rddId(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+
+  private def cached(id: Int): Boolean =
+    spark.sparkContext.getRDDStorageInfo.exists(_.id == id)
+
+  test("releasing a computed lazy checkpoint frees its block, also after " +
+      "a failed job") {
+    val computed = lazyCheckpoint()
+    val id = rddId(computed)
+    assert(computed.collect().length === 10)
+    assert(within(5)(cached(id)))
+    Checkpoints.releaseIntermediate(computed)
+    assert(within(5)(!cached(id)))
+
+    // the job stores the block and then fails, so the RDD is never
+    // marked checkpointed
+    val failed = lazyCheckpoint()
+    val fid = rddId(failed)
+    intercept[Exception](failed.foreach(_ =>
+      throw new IllegalStateException("after the block is stored")))
+    assert(within(5)(cached(fid)))
+    Checkpoints.releaseIntermediate(failed)
+    assert(within(5)(!cached(fid)))
   }
 }

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
   * query registry and its oracle map stay key-for-key in step, and the
   * operators depend only on their inputs and the session's conf — no
   * process-global switches on the product path; and a schema the
-  * program declares for its own output is the one Spark infers from
-  * it. */
+  * program declares, for its own output or for a fixture table it
+  * reads, is the one Spark infers from the file. */
 class ContractsSpec extends SparkSpec {
 
   test("every registered query has an oracle and every oracle a query") {
@@ -75,5 +75,83 @@ class ContractsSpec extends SparkSpec {
         .schema
       assert(inferred === MultiSink.AggSchema, d)
     }
+  }
+
+  // the fixture root: the producer's default source is its sf0.001
+  private val testdata = Paths.get(
+    GraftConfig.Defaults("graft.producer.data.sourceDir")).getParent.toString
+  private val fixtureDirs = Seq(s"$testdata/sf0.001", s"$testdata/sf0.01",
+    "perfbench/data/sf0.01")
+
+  test("each table's declared schema is the one Spark infers from the " +
+      "fixtures: names, order, types, field and element nullability") {
+    assert(Tables.all.size === 10)
+    assert(Tables.all.toSet === Tables.schema.keySet)
+    for (dir <- fixtureDirs; name <- Tables.all) {
+      assert(Files.exists(Paths.get(s"$dir/$name.parquet")), s"$dir/$name")
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      // StructType equality covers names, order, data types (element
+      // nullability included) and field nullability; the tree string
+      // shows where they differ
+      assert(inferred === Tables.schema(name),
+        s"$dir/$name\ninferred:\n${inferred.treeString}" +
+          s"declared:\n${Tables.schema(name).treeString}")
+      assert(Tables(spark, dir, name).schema === inferred, s"$dir/$name")
+    }
+  }
+
+  test("reading and planning over every fixture table runs no Spark " +
+      "job; an inferring read runs one or more") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.collection.concurrent.TrieMap
+    val sc = spark.sparkContext
+    val jobsByGroup = TrieMap.empty[String, Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(g =>
+          jobsByGroup.put(g, jobsByGroup.getOrElse(g, 0) + 1))
+    }
+    val run = java.util.UUID.randomUUID()
+    // jobs started in `group` by `body`; a marker job run afterwards
+    // in a group of its own is delivered after them on the listener bus
+    def jobsIn(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(s"$run-$group", group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$run-$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(within(30)(jobsByGroup.contains(s"$run-$group-marker")))
+      jobsByGroup.getOrElse(s"$run-$group", 0)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val dir = s"$testdata/sf0.01"
+      val declared = jobsIn("declared") {
+        val t = Tables.all.map(n => n -> Tables(spark, dir, n)).toMap
+        import org.apache.spark.sql.functions.col
+        t("lineitem").join(t("orders"), col("l_orderkey") === col("o_orderkey"))
+          .join(t("customer"), col("o_custkey") === col("c_custkey"))
+          .groupBy("c_mktsegment").count()
+          .queryExecution.executedPlan
+        Tables.all.foreach(n => t(n).queryExecution.executedPlan)
+      }
+      assert(declared === 0)
+      val inferred = jobsIn("inferred") {
+        spark.read.parquet(s"$dir/orders.parquet")
+      }
+      assert(inferred >= 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ScaleGen's output check counts a table written with its declared " +
+      "schema and fails, naming the table, on any other schema") {
+    val dir = Files.createTempDirectory("graft_scalegen_check").toString
+    Tables(spark, s"$testdata/sf0.001", "region")
+      .write.parquet(s"$dir/region.parquet")
+    assert(ScaleGen.checkedCount(spark, dir, "region") === 5L)
+    spark.range(3).toDF("n_nationkey").write.parquet(s"$dir/nation.parquet")
+    val e = intercept[IllegalArgumentException](
+      ScaleGen.checkedCount(spark, dir, "nation"))
+    assert(e.getMessage.contains("nation was written as"), e.getMessage)
   }
 }

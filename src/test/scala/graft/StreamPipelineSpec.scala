@@ -700,4 +700,119 @@ class StreamPipelineSpec extends SparkSpec {
     assert(within(5)(tracker.getActiveJobIds.isEmpty),
       tracker.getActiveJobIds.mkString(","))
   }
+
+  // the producer's default source, the sf0.001 fixture `events`, where
+  // `ts` is timestamp_ntz; its rows, and a directory holding the same
+  // rows as `micros/events.parquet` and `nanos/events.parquet`
+  private lazy val producerSources = {
+    import java.time.ZoneOffset.UTC
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+    val fixture = GraftConfig.Defaults("graft.producer.data.sourceDir")
+    val base = Files.createTempDirectory("graft_producer").toString
+    val rows = Tables(spark, fixture, "events").collect().toSeq
+    def instant(r: Row) =
+      Option(r.getAs[java.time.LocalDateTime]("ts")).map(_.toInstant(UTC))
+
+    // the shape the stream benchmark writes: StreamSources.eventSchema,
+    // so `ts` is TIMESTAMP (UTC-adjusted) parquet
+    spark.createDataFrame(rows.map(r => Row(r.get(0),
+        instant(r).map(Timestamp.from).orNull, r.get(2), r.get(3), r.get(4),
+        r.get(5))).asJava, StreamSources.eventSchema)
+      .coalesce(1).write.parquet(s"$base/micros/events.parquet")
+
+    // the shape pandas writes by default: INT64 TIMESTAMP(NANOS), which
+    // Spark cannot write
+    {
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.schema.MessageTypeParser
+      val schema = MessageTypeParser.parseMessageType(
+        """message events {
+          |  optional int64 event_id;
+          |  optional int64 ts (TIMESTAMP(NANOS,false));
+          |  optional int64 user_id;
+          |  optional binary event_type (STRING);
+          |  optional double value;
+          |  optional binary props (STRING);
+          |}""".stripMargin)
+      val groups = new SimpleGroupFactory(schema)
+      val w = ExampleParquetWriter
+        .builder(new Path(s"$base/nanos/events.parquet/part-0.parquet"))
+        .withType(schema).build()
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        if (!r.isNullAt(0)) g.add("event_id", r.getLong(0))
+        instant(r).foreach(i =>
+          g.add("ts", i.getEpochSecond * 1000000000L + i.getNano))
+        if (!r.isNullAt(2)) g.add("user_id", r.getLong(2))
+        if (!r.isNullAt(3)) g.add("event_type", r.getString(3))
+        if (!r.isNullAt(4)) g.add("value", r.getDouble(4))
+        if (!r.isNullAt(5)) g.add("props", r.getString(5))
+        w.write(g)
+      } finally w.close()
+    }
+    (fixture, rows.sortBy(_.getLong(0)).map(instant), base)
+  }
+
+  test("the producer publishes the same rows from a timestamp_ntz, a " +
+      "timestamp and a pandas nanosecond ts, and leaves the session's " +
+      "nanos conf unset") {
+    import graft.streaming.{MemoryBus, ProducerMain}
+    import org.apache.spark.sql.Row
+    val (fixture, instants, base) = producerSources
+    def published(sourceDir: String): Seq[Row] = {
+      val bus = new MemoryBus(spark)
+      ProducerMain.produce(spark, GraftConfig.loadWithDefaults()
+        .overlay(Map("graft.producer.data.sourceDir" -> sourceDir)),
+        Some(bus))
+      val name = s"published_${java.util.UUID.randomUUID().toString
+        .replace("-", "")}"
+      val q = bus.subscribe(spark).writeStream.format("memory")
+        .queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name).collect().toSeq.sortBy(_.getLong(0))
+    }
+    val fromFixture = published(fixture)
+    assert(fromFixture.size === instants.size)
+    assert(fromFixture.map(r => Option(r.getTimestamp(1)).map(_.toInstant))
+      === instants)
+    assert(published(s"$base/micros") === fromFixture)
+    assert(published(s"$base/nanos") === fromFixture)
+    assert(!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
+      .contains("true"))
+  }
+
+  test("the producer runs in the caller's session: a query execution " +
+      "listener registered on it sees every bus write, also for a " +
+      "nanosecond source") {
+    import graft.streaming.ProducerMain
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val (_, _, base) = producerSources
+    val written = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.logical.collectFirst {
+          case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString
+        }.foreach(written.add)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try for (source <- Seq("micros", "nanos")) {
+      val bus = s"$base/bus_$source"
+      val n = ProducerMain.produce(spark, GraftConfig.loadWithDefaults()
+        .overlay(Map("graft.producer.data.sourceDir" -> s"$base/$source",
+          "graft.producer.file.outputDir" -> bus)))
+      assert(n === 5L)
+      def seen = written.asScala.count(_.contains(s"/bus_$source/"))
+      assert(within(10)(seen == n), s"$source: $seen bus writes seen, " +
+        s"$n published")
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * corpus sizes this exists for, NEVER the production path (the file
   * and Kafka impls write executor-side).
   *
-  * Lives in src/test (ADVICE r16): MemoryStream is a Spark-INTERNAL
+  * Lives in src/test: MemoryStream is a Spark-INTERNAL
   * test utility (`org.apache.spark.sql.execution.streaming.runtime`)
   * with no stability guarantee — the production jar must not depend
   * on it, and tests are this class's only consumer.
