@@ -62,16 +62,16 @@ object Relational {
     * Ordinals are 1-based and identical to a global
     * `row_number().over(Window.orderBy(orderCols))` (spec-pinned).
     *
-    * Single-pass: the sorted data is materialized ONCE as an eager local
-    * checkpoint; the partition-size pass and the final rows both read
-    * the checkpoint blocks instead of re-executing the range sort (the
-    * previous `.rdd` formulation ran the sort twice and dropped
-    * WholeStageCodegen for downstream — see RelationalSpec's scan-count
-    * proof). monotonically_increasing_id encodes (partition, local row
-    * number) post-sort, and range partitioning makes partition ids
-    * globally sort-ordered, so checkpoint-partition offsets + local ids
-    * reconstruct the exact global ordinal. Driver state: one long per
-    * partition (the same bounded array the old sizes pass collected).
+    * Single-pass: the sorted data is materialized ONCE as a local
+    * checkpoint, by the same job that counts each partition's rows; the
+    * final rows read the checkpoint blocks instead of re-executing the
+    * range sort (the previous `.rdd` formulation ran the sort twice and
+    * dropped WholeStageCodegen for downstream — see RelationalSpec's
+    * scan-count proof). monotonically_increasing_id encodes (partition,
+    * local row number) post-sort, and range partitioning makes partition
+    * ids globally sort-ordered, so checkpoint-partition offsets + local
+    * ids reconstruct the exact global ordinal. Driver state: one long
+    * per partition.
     *
     * Chosen trades, explicit: (1) localCheckpoint blocks are executor-
     * local with TRUNCATED lineage — an executor loss mid-consumption
@@ -81,39 +81,54 @@ object Relational {
     * CacheManager with no caller-reachable release (unpersist on the
     * returned derived frame is a no-op — measured); checkpoint blocks
     * are RDD-level and freed by the ContextCleaner when the frame is
-    * dropped. EAGER — composing this runs the sort job.
+    * dropped. EAGER — composing this runs the sort and the size job.
     */
   def withScalableOrdinal(df: DataFrame, orderCols: Seq[Column],
-      ordinalName: String = "row_num"): DataFrame = {
+      ordinalName: String = "row_num"): DataFrame =
+    withScalableOrdinalCounted(df, orderCols, ordinalName)._1
+
+  /** [[withScalableOrdinal]] and the frame's row total, which the
+    * partition-size pass already holds: a caller that needs both runs
+    * no count job of its own. */
+  def withScalableOrdinalCounted(df: DataFrame, orderCols: Seq[Column],
+      ordinalName: String = "row_num"): (DataFrame, Long) = {
     // the nondeterministic id pins the projection ABOVE the sort
     // (Catalyst cannot reorder it below), so ids are assigned in sorted
     // order within each range partition: pid = upper 31 bits, local row
     // number = lower 33
     val sorted = df.orderBy(orderCols: _*)
       .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     val pid = shiftrightunsigned(col("__mid"), 33).cast("int")
     val localIdx = col("__mid").bitwiseAND(lit((1L << 33) - 1))
-    // partition sizes -> cumulative offsets (tiny driver-side array);
-    // reading only __mid from the checkpoint, no re-sort
-    val sizeRows = sorted.groupBy(pid.as("__pid"))
-      .agg(count(lit(1)).as("__n"))
-      .collect()
+    // partition sizes -> cumulative offsets (tiny driver-side array).
+    // One job, no shuffle: it computes every partition of the lazy
+    // checkpoint, which caches its blocks and, when the job ends,
+    // truncates the lineage — so it is also the materializing pass
+    val sizeRows = sorted.select(pid).queryExecution.toRdd
+      .mapPartitions { rows =>
+        if (!rows.hasNext) Iterator.empty
+        else {
+          val p = rows.next().getInt(0)
+          Iterator(p -> (1L + rows.size))
+        }
+      }.collect()
     // monotonically_increasing_id holds 33 bits of local row number —
     // a >8.6e9-row range partition would overflow into the pid bits and
     // corrupt ordinals SILENTLY. Unreachable with sane partition sizing
     // (it would be a ~0.5 TB single partition), but guard it loudly.
-    require(sizeRows.forall(_.getLong(1) < (1L << 33)),
+    require(sizeRows.forall(_._2 < (1L << 33)),
       s"withScalableOrdinal: a sort partition exceeds 2^33 rows; " +
         "repartition the input or raise spark.sql.shuffle.partitions")
-    val nParts = sizeRows.map(_.getInt(0)).foldLeft(-1)(math.max) + 1
+    val nParts = sizeRows.map(_._1).foldLeft(-1)(math.max) + 1
     val sizes = Array.fill(nParts)(0L)
-    sizeRows.foreach(r => sizes(r.getInt(0)) = r.getLong(1))
-    val offsets = sizes.scanLeft(0L)(_ + _).dropRight(1)
-    sorted
+    sizeRows.foreach { case (p, n) => sizes(p) = n }
+    val cumulative = sizes.scanLeft(0L)(_ + _)
+    val offsets = cumulative.dropRight(1)
+    (sorted
       .withColumn(ordinalName,
         element_at(typedLit(offsets), pid + 1) + localIdx + 1)
-      .drop("__mid")
+      .drop("__mid"), cumulative.last)
   }
 
   /** Top-k keys by row count with a deterministic tie-break on the key.

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * streaming frame from [[EventBus.subscribe]], and NOTHING else in
   * either main knows the transport. Implementations:
   *
-  *   - [[FileBus]] — the deployment default, byte-identical to the
-  *     previous hard-wired behavior (one file per batch, overwrite-
-  *     idempotent dirs, file-source stream with per-file pacing).
+  *   - [[FileBus]] — the deployment default: one file per batch,
+  *     overwrite-idempotent dirs, file-source stream with per-file
+  *     pacing.
   *   - `MemoryBus` (src/test — it rides Spark-internal MemoryStream,
   *     which must not ship in the production jar): in-process, for
   *     tests; the same pipeline runs against a MemoryStream with no
@@ -39,11 +39,13 @@ trait EventBus {
 }
 
 /** Shared-volume file bus — the deployment transport. Publishing is
-  * exactly [[Replay.writeBatches]] (one `batch_id=N` dir per batch,
-  * overwrite-idempotent); subscribing is exactly
-  * [[StreamSources.fileStream]] over the dir glob. Byte-identical to
-  * the pre-seam hard-wired mains: same writer, same reader, same
-  * options. */
+  * exactly [[Replay.writeBatches]]: one Spark write stages every batch
+  * under `dir/_publish`, then each is renamed into its own
+  * `batch_NNNNNN` dir (one JSON-lines file each, overwrite-idempotent)
+  * in batch order. Subscribing is exactly [[StreamSources.fileStream]]
+  * over `dir/batch_NNNNNN` dirs, the layout the bus writes, so neither
+  * the staging dir nor any other stray dir in `dir` reaches the
+  * consumer. */
 final class FileBus(dir: String, format: String = "json",
     maxFilesPerTrigger: Int = 1,
     cleanSource: Option[String] = None,
@@ -54,7 +56,7 @@ final class FileBus(dir: String, format: String = "json",
       intervalMillis, format)
 
   override def subscribe(spark: SparkSession): DataFrame =
-    StreamSources.fileStream(spark, s"$dir/*", format = format,
+    StreamSources.fileStream(spark, s"$dir/batch_*", format = format,
       maxFilesPerTrigger = maxFilesPerTrigger,
       cleanSource = cleanSource, archiveDir = archiveDir)
 }

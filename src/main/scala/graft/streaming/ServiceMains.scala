@@ -22,8 +22,7 @@ object ProducerMain {
   /** Producer half: slice the configured source table into ordered
     * batch publishes on the event bus (pacing from config). The
     * transport is the [[EventBus]] seam — `bus = None` builds the
-    * deployment [[FileBus]] from config, byte-identical to the
-    * pre-seam hard-wired file drop; tests pass a `MemoryBus`; a
+    * deployment [[FileBus]] from config; tests pass a `MemoryBus`; a
     * Kafka bus drops in the same way. Returns the number of batches
     * published. */
   def produce(spark: SparkSession, c: GraftConfig,
@@ -36,11 +35,12 @@ object ProducerMain {
         d("graft.producer.data.table"))
       .select(StreamSources.eventSchema.fields.map(f =>
         col(f.name).cast(f.dataType)): _*)
-    val prepared = Replay.prepare(events, Seq(col("ts"), col("event_id")))
-    val total = prepared.count()
+    // the row total comes from the ordinal's size pass: no count job
+    val (prepared, total) =
+      Replay.prepareCounted(events, Seq(col("ts"), col("event_id")))
     val confBatch = d("graft.producer.data.batchSize").toLong
     val batchSize = if (confBatch > 0) confBatch else math.max(1L, total / 5)
-    val nBatches = Replay.batchCount(prepared, batchSize)
+    val nBatches = Replay.batchCount(total, batchSize)
     bus.getOrElse(new FileBus(d("graft.producer.file.outputDir"),
         format = d("graft.producer.file.format")))
       .publishBatches(prepared, batchSize, nBatches,

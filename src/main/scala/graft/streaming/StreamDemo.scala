@@ -63,9 +63,8 @@ object StreamDemo {
     println(s"PRODUCED_BATCHES=$nBatches")
 
     // --- consumer: file stream -> four checkpointed datasets (the SAME
-    // body the standalone ConsumerMain container runs); batches land
-    // one-subdirectory-each; the file source doesn't recurse, so the
-    // consumer watches with a glob
+    // body the standalone ConsumerMain container runs), subscribed
+    // through the FileBus
     val q = ConsumerMain.startConsumer(spark, c)
     q.processAllAvailable()
     q.stop()
@@ -77,11 +76,10 @@ object StreamDemo {
     }
     println(s"SOURCE_ROWS=$total")
 
-    // --- stateful operators smoke: session windows over the same stream
+    // --- stateful operators smoke: session windows over the same bus
     val sess = StatefulSessions.sessions(
-      StreamSources.fileStream(spark, s"$watchDir/*",
-        format = d("graft.consumer.source.format"),
-        maxFilesPerTrigger = 100),
+      new FileBus(watchDir, format = d("graft.consumer.source.format"),
+        maxFilesPerTrigger = 100).subscribe(spark),
       gapSeconds = 1800L, watermarkDelay = "0 seconds")
     val sq = sess.writeStream.outputMode("append").format("memory")
       .queryName("sessions_out")

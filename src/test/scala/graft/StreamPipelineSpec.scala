@@ -69,8 +69,9 @@ class StreamPipelineSpec extends SparkSpec {
   test("replay -> file stream -> 4 idempotent sinks preserves rows") {
     val base = Files.createTempDirectory("graft_pipe").toString
     val events = mkEvents(60)
-    val prepared = Replay.prepare(events, Seq(col("ts"), col("event_id")))
-    val nb = Replay.batchCount(prepared, 20)
+    val (prepared, total) =
+      Replay.prepareCounted(events, Seq(col("ts"), col("event_id")))
+    val nb = Replay.batchCount(total, 20)
     assert(nb === 3)
     Replay.writeBatches(prepared, s"$base/incoming", 20, nb)
     prepared.unpersist()
@@ -104,8 +105,9 @@ class StreamPipelineSpec extends SparkSpec {
     import graft.streaming.{FileBus, MemoryBus}
     val base = Files.createTempDirectory("graft_membus").toString
     val events = mkEvents(60)
-    val prepared = Replay.prepare(events, Seq(col("ts"), col("event_id")))
-    val nb = Replay.batchCount(prepared, 20)
+    val (prepared, total) =
+      Replay.prepareCounted(events, Seq(col("ts"), col("event_id")))
+    val nb = Replay.batchCount(total, 20)
 
     // memory transport: publish through the seam, consume the seam's
     // stream — zero filesystem between producer and consumer
@@ -810,9 +812,227 @@ class StreamPipelineSpec extends SparkSpec {
         .overlay(Map("graft.producer.data.sourceDir" -> s"$base/$source",
           "graft.producer.file.outputDir" -> bus)))
       assert(n === 5L)
+      // one write publishes every batch
       def seen = written.asScala.count(_.contains(s"/bus_$source/"))
-      assert(within(10)(seen == n), s"$source: $seen bus writes seen, " +
-        s"$n published")
+      assert(within(10)(seen == 1), s"$source: $seen bus writes seen, " +
+        s"$n batches published")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  // --- the file bus's publish contract ---
+
+  private def batchDirs(bus: String): Seq[java.io.File] =
+    Option(new java.io.File(bus).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("batch_")).sortBy(_.getName)
+
+  private def partFiles(dir: java.io.File): Seq[java.io.File] =
+    dir.listFiles.toSeq.filter(_.getName.startsWith("part-"))
+
+  private val EventId = """"event_id":(\d+)""".r
+
+  /** Event ids of a bus batch directory's one file, in file order. */
+  private def fileIds(dir: java.io.File): Seq[Long] = {
+    val Seq(f) = partFiles(dir)
+    val src = scala.io.Source.fromFile(f)
+    try src.getLines().map(l =>
+      EventId.findFirstMatchIn(l).get.group(1).toLong).toList
+    finally src.close()
+  }
+
+  /** Event ids of `mkEvents(n)` in the producer's (ts, event_id) order. */
+  private def orderedIds(n: Int): Seq[Long] =
+    (1 to n).sortBy(i => (i % 24, i)).map(_.toLong)
+
+  private def publish(n: Int, bus: String, size: Long, nBatches: Long,
+      intervalMillis: Long = 0L): Unit = {
+    val prepared = Replay.prepare(mkEvents(n),
+      Seq(col("ts"), col("event_id")))
+    Replay.writeBatches(prepared, bus, size, nBatches, intervalMillis)
+  }
+
+  test("every published batch dir holds one part- JSON file, its rows " +
+      "in (ts, event_id) order, and no staging dir is left") {
+    val bus = s"${Files.createTempDirectory("graft_pub1")}/bus"
+    publish(50, bus, 7, 8)
+    val dirs = batchDirs(bus)
+    assert(dirs.map(_.getName) === (0 until 8).map(b => f"batch_$b%06d"))
+    dirs.foreach(d => assert(partFiles(d).size === 1, d.getName))
+    assert(dirs.map(fileIds) === orderedIds(50).grouped(7).toSeq)
+    assert(new java.io.File(bus).list().toSet ===
+      dirs.map(_.getName).toSet)
+  }
+
+  test("with maxFilesPerTrigger = 1, batch files sharing an mtime are " +
+      "consumed one per trigger, in batch order") {
+    import graft.streaming.FileBus
+    import scala.collection.mutable.ArrayBuffer
+    val base = Files.createTempDirectory("graft_pub2").toString
+    val bus = s"$base/bus"
+    publish(18, bus, 3, 6)
+    // a single-task write of small files can close them all within one
+    // tick of the file system's clock
+    val mtime = System.currentTimeMillis() - 1000
+    batchDirs(bus).flatMap(partFiles).foreach(f =>
+      assert(f.setLastModified(mtime)))
+    val triggers = ArrayBuffer.empty[Seq[Long]]
+    val q = new FileBus(bus, maxFilesPerTrigger = 1).subscribe(spark)
+      .writeStream.option("checkpointLocation", s"$base/checkpoint")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        triggers += batch.select("event_id").as[Long].collect().toSeq
+        ()
+      }.start()
+    try q.processAllAvailable() finally q.stop()
+    assert(triggers.filter(_.nonEmpty).toSeq ===
+      orderedIds(18).grouped(3).toSeq)
+  }
+
+  test("a publish of fewer batches than the rows fill writes only those") {
+    val bus = s"${Files.createTempDirectory("graft_pub3")}/bus"
+    publish(30, bus, 5, 3)
+    val dirs = batchDirs(bus)
+    assert(dirs.map(_.getName) === (0 until 3).map(b => f"batch_$b%06d"))
+    assert(dirs.map(fileIds) === orderedIds(30).take(15).grouped(5).toSeq)
+  }
+
+  test("an empty source publishes no batch and leaves no staging dir") {
+    val bus = s"${Files.createTempDirectory("graft_pub4")}/bus"
+    val (prepared, total) = Replay.prepareCounted(
+      mkEvents(10).filter(lit(false)), Seq(col("ts"), col("event_id")))
+    assert(total === 0L)
+    assert(Replay.batchCount(total, 5) === 0L)
+    Replay.writeBatches(prepared, bus, 5, 0)
+    assert(!new java.io.File(bus).exists)
+    // asked for batches that hold no rows: still nothing
+    Replay.writeBatches(prepared, bus, 5, 2)
+    assert(Option(new java.io.File(bus).list()).toSeq.flatten.isEmpty)
+  }
+
+  test("re-publishing into the same bus leaves one file per batch") {
+    val bus = s"${Files.createTempDirectory("graft_pub5")}/bus"
+    publish(20, bus, 5, 4)
+    publish(20, bus, 5, 4)
+    val dirs = batchDirs(bus)
+    assert(dirs.size === 4)
+    dirs.foreach(d => assert(partFiles(d).size === 1, d.getName))
+    assert(dirs.flatMap(fileIds) === orderedIds(20))
+  }
+
+  test("with intervalMillis > 0, batch k+1 appears no earlier than " +
+      "intervalMillis after batch k") {
+    val bus = s"${Files.createTempDirectory("graft_pub6")}/bus"
+    val interval = 400L
+    val names = (0 until 3).map(b => f"batch_$b%06d")
+    val seenAt = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    @volatile var polling = true
+    val poller = new Thread(() =>
+      while (polling) {
+        names.foreach(n =>
+          if (new java.io.File(s"$bus/$n").exists)
+            seenAt.putIfAbsent(n, System.nanoTime()))
+        Thread.sleep(1)
+      })
+    poller.start()
+    try {
+      publish(12, bus, 4, 3, intervalMillis = interval)
+      within(5)(seenAt.size == names.size)
+    } finally { polling = false; poller.join() }
+    val at = names.map(n => Option(seenAt.get(n)))
+    assert(at.forall(_.isDefined), seenAt)
+    // the poll period and the file checks bound how late a batch is seen
+    val slackMs = 25L
+    at.flatten.sliding(2).foreach { case Seq(a, b) =>
+      assert((b - a) / 1000000L >= interval - slackMs,
+        s"drops ${(b - a) / 1000000L} ms apart")
+    }
+  }
+
+  test("produce runs as many Spark jobs for 2 batches as for 8") {
+    import graft.streaming.ProducerMain
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val base = Files.createTempDirectory("graft_pub7").toString
+    mkEvents(80).coalesce(1).write.parquet(s"$base/src/events.parquet")
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(groups.add)
+    }
+    val sc = spark.sparkContext
+    def jobs(group: String)(body: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once a later job's start is
+      // seen, so is every start of the group's
+      val marker = s"$group-marker"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(within(10)(groups.contains(marker)))
+      groups.asScala.count(_ == group)
+    }
+    def produce(batchSize: Int): Long = ProducerMain.produce(spark,
+      GraftConfig.loadWithDefaults().overlay(Map(
+        "graft.producer.data.sourceDir" -> s"$base/src",
+        "graft.producer.file.outputDir" -> s"$base/bus_$batchSize",
+        "graft.producer.data.batchSize" -> batchSize.toString)))
+    sc.addSparkListener(listener)
+    try {
+      var published = Seq.empty[Long]
+      val two = jobs("produce-2")(published :+= produce(40))
+      val eight = jobs("produce-8")(published :+= produce(10))
+      assert(published === Seq(2L, 8L))
+      assert(two === eight, s"$two jobs for 2 batches, $eight for 8")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a stray partition-style dir in the bus does not reach a running " +
+      "FileBus consumer") {
+    import graft.streaming.FileBus
+    val base = Files.createTempDirectory("graft_pub8").toString
+    val bus = s"$base/bus"
+    publish(20, bus, 10, 2)
+    val q = new FileBus(bus).subscribe(spark).writeStream
+      .format("parquet").option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/checkpoint").start()
+    try {
+      q.processAllAvailable()
+      // what an interrupted publish or a foreign writer leaves behind
+      val stray = new java.io.File(s"$bus/stray/x=1")
+      assert(stray.mkdirs())
+      Files.write(new java.io.File(stray, "part-00000.json").toPath,
+        "{\"event_id\":999}\n".getBytes("UTF-8"))
+      val late = new java.io.File(s"$bus/batch_000002")
+      assert(late.mkdirs())
+      Files.write(new java.io.File(late, "part-00000.json").toPath,
+        "{\"event_id\":21}\n".getBytes("UTF-8"))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(q.exception.isEmpty, q.exception)
+    assert(spark.read.parquet(s"$base/out").select("event_id").as[Long]
+      .collect().sorted.toSeq === (1L to 21L))
+  }
+
+  test("a consumer restarted from a checkpoint written under the old " +
+      "dir/* subscription re-reads no consumed file") {
+    import graft.streaming.FileBus
+    val base = Files.createTempDirectory("graft_pub9").toString
+    val bus = s"$base/bus"
+    def drain(stream: DataFrame): Unit = {
+      val q = stream.writeStream.format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/checkpoint").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    publish(20, bus, 10, 2)
+    drain(StreamSources.fileStream(spark, s"$bus/*"))
+    // a third batch lands; the consumer comes back on the FileBus
+    val late = new java.io.File(s"$bus/batch_000002")
+    assert(late.mkdirs())
+    Files.write(new java.io.File(late, "part-00000.json").toPath,
+      "{\"event_id\":21}\n".getBytes("UTF-8"))
+    drain(new FileBus(bus).subscribe(spark))
+    assert(spark.read.parquet(s"$base/out").select("event_id").as[Long]
+      .collect().sorted.toSeq === (1L to 21L))
   }
 }

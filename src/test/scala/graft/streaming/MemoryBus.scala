@@ -3,6 +3,13 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** One published event as the MemoryStream carries it. Top-level: the
+  * encoder Spark generates for a case class nested in a class cannot
+  * construct it, and falls back to interpreted mode with an ERROR. */
+final case class BusEvent(event_id: java.lang.Long,
+    ts: java.sql.Timestamp, user_id: java.lang.Long,
+    event_type: String, value: java.lang.Double, props: String)
+
 /** In-process bus over a MemoryStream — the TEST transport (and the
   * template a Kafka impl follows: publish rows, subscribe a stream).
   * Each published batch becomes one MemoryStream block, so
@@ -18,10 +25,6 @@ import org.apache.spark.sql.functions._
   */
 final class MemoryBus(spark: SparkSession) extends EventBus {
   import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
-  private case class BusEvent(event_id: java.lang.Long,
-      ts: java.sql.Timestamp, user_id: java.lang.Long,
-      event_type: String, value: java.lang.Double, props: String)
 
   private implicit val enc: org.apache.spark.sql.Encoder[BusEvent] =
     org.apache.spark.sql.Encoders.product[BusEvent]
