@@ -20,17 +20,17 @@ object GraftSession {
       // ContextCleaner GCs their dependency objects — under a large
       // driver heap a multi-query sweep can run for an hour without a
       // single full GC, accumulating dead shuffle files until the disk
-      // fills (the round-16 sf10 probe failed exactly this way: later
-      // queries' spills hit "No space left" on a 78 GB volume while
-      // earlier queries' dead shuffles still held it). Default is
+      // fills (an sf10 sweep failed exactly this way: later queries'
+      // spills hit "No space left" on a 78 GB volume while earlier
+      // queries' dead shuffles still held it). Default is
       // 30min; 5min bounds the dead-file window at negligible GC cost
       .config("spark.cleaner.periodicGC.interval", "5min")
-    // deployment-tuning seam (r18): extra session confs as
+    // deployment-tuning seam: extra session confs as
     // `key=value;key=value` — cluster values (shuffle partitions,
     // codecs, join-strategy preferences) stay parameterised per the
     // optimization contract instead of hard-coding local-mode wins;
     // unset = the defaults above, so the driver's bench is unchanged.
-    // LIMITATION (documented, ADVICE r18): ';' is the entry separator
+    // LIMITATION (documented): ';' is the entry separator
     // with no escaping, so a VALUE containing ';' (e.g. a multi-flag
     // extraJavaOptions) cannot be expressed — it splits into malformed
     // entries and fails the require below (loudly, never silently).

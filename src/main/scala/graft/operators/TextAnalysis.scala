@@ -213,8 +213,8 @@ object TextAnalysis {
     * would outrank the batch's tail waits one round — the standard
     * batched-trainer approximation, traded for driver round-trips
     * dropping from `numMerges` to `numMerges / M`. At a production
-    * 32k-merge fit with M = 256 that is 125 jobs, not 32k
-    * (BpeScaleCheck measures the effect).
+    * 32k-merge fit with M = 256 that is 125 jobs, not 32k (measured
+    * in SCALE.md's BPE section).
     *
     * Scale: the loop runs over the DISTINCT-WORD table (vocab-
     * bounded, checkpointed once — never the corpus; 100 TB of text is

@@ -183,6 +183,22 @@ class RelationalSpec extends SparkSpec {
     assert(ours === builtin) // exact equality, not approximate
   }
 
+  test("groupedQuantiles reads its input exactly twice for two measures") {
+    // accumulator-instrumented source: every pass over the input adds n.
+    // Pass A's bracket aggregate and pass B's per-group counts are the
+    // two scans; a DAG fork that re-scans the base (Spark reuses
+    // nothing across plan branches unless exchange reuse fires) reads
+    // as a third multiple of n.
+    val n = 5000
+    val acc = spark.sparkContext.longAccumulator("quantile-input-scans")
+    val base = spark.range(n)
+      .map { x => acc.add(1); ("g" + (x % 3), x.toDouble % 97) }
+      .toDF("g", "x")
+    Relational.groupedQuantiles(base, "g",
+      Seq(("x", 0.5, "med"), ("x", 0.95, "p95"))).collect()
+    assert(acc.value === 2L * n)
+  }
+
   test("groupedQuantilesApprox: exact below the sketch accuracy") {
     // GK with accuracy > n is exact — on these 200-row groups the
     // sketch flavor must agree with the exact operator's values up to
