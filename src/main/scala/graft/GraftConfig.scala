@@ -20,19 +20,35 @@ import scala.collection.mutable
   */
 final case class GraftConfig(entries: Map[String, String]) {
 
+  /** The value at `path`, else its code default in
+    * [[GraftConfig.Defaults]]; a key in neither fails, naming it. */
+  def str(path: String): String =
+    entries.get(path).orElse(GraftConfig.Defaults.get(path)).getOrElse(
+      throw new IllegalArgumentException(
+        s"config key '$path' is not set and has no default"))
+
+  /** The value at `path`, else `default` (for a fallback that is
+    * itself another key's value). */
   def str(path: String, default: String): String =
     entries.getOrElse(path, default)
 
   def strOpt(path: String): Option[String] = entries.get(path)
 
-  def long(path: String, default: Long): Long =
-    entries.get(path).map(_.toLong).getOrElse(default)
+  def long(path: String): Long = typed(path, "a long")(_.toLongOption)
 
-  def int(path: String, default: Int): Int =
-    entries.get(path).map(_.toInt).getOrElse(default)
+  def int(path: String): Int = typed(path, "an int")(_.toIntOption)
 
-  def bool(path: String, default: Boolean): Boolean =
-    entries.get(path).map(_.toBoolean).getOrElse(default)
+  def bool(path: String): Boolean =
+    typed(path, "a boolean")(_.toBooleanOption)
+
+  /** `str(path)` parsed by `parse`; a malformed value fails naming the key
+    * and the value, not just the value. */
+  private def typed[A](path: String, kind: String)(
+      parse: String => Option[A]): A = {
+    val v = str(path)
+    parse(v).getOrElse(throw new IllegalArgumentException(
+      s"config key '$path' = '$v' is not $kind"))
+  }
 
   /** This config with `overrides` layered on top (override wins). */
   def overlay(overrides: Map[String, String]): GraftConfig =

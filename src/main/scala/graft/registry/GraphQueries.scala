@@ -72,20 +72,11 @@ object GraphQueries {
         .select(col("l_orderkey"), col("l_partkey"))
       val a = li.select(col("l_orderkey"), col("l_partkey").as("src"))
       val b = li.select(col("l_orderkey"), col("l_partkey").as("dst"))
-      // big-SF single-box probes bound peak spill WITHOUT hand tuning:
-      // SPARK_GRAFT_TRI_SPILL_BUDGET (bytes — the per-wave wedge-
-      // shuffle target, ~1/4 of free scratch to leave room for the
-      // wave's other exchanges) derives W from the exact wedge count
-      // (Graph.triangleCountsBudgeted); unset = the
-      // single-job W=1 cluster plan
-      val triEdges = a.join(b, "l_orderkey")
+      // the single-job W=1 cluster plan; a big-SF single-box probe that
+      // must bound peak spill calls Graph.triangleCountsBudgeted itself
+      Graph.triangleCounts(a.join(b, "l_orderkey")
         .where(col("src") < col("dst"))
-        .select(col("src"), col("dst"))
-      sys.env.get("SPARK_GRAFT_TRI_SPILL_BUDGET") match {
-        case Some(budget) =>
-          Graph.triangleCountsBudgeted(triEdges, budget.toLong)
-        case None => Graph.triangleCounts(triEdges)
-      }
+        .select(col("src"), col("dst")))
     },
       // triangle oracle: the same degree-ordered orientation unrolled as
       // CTEs — counts are exact integers; the coefficient mirrors the

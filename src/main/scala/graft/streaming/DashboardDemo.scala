@@ -13,15 +13,14 @@ import graft.GraftConfig
 object DashboardDemo {
   def main(args: Array[String]): Unit = {
     val c = GraftConfig.loadWithDefaults(args.find(_.endsWith(".conf")))
-    def d(k: String) = c.str(k, GraftConfig.Defaults(k))
     val processed = args.filterNot(_.endsWith(".conf")).headOption
-      .getOrElse(d("graft.consumer.output.directory"))
-    val ticks = d("graft.dashboard.ticks").toInt
-    val refreshSeconds = d("graft.dashboard.refreshSeconds").toLong
-    val topK = d("graft.dashboard.topK").toInt
-    val htmlFile = d("graft.dashboard.htmlFile")
-    val port = d("graft.dashboard.port").toInt
-    val metricsDir = Some(d("graft.dashboard.metricsDir"))
+      .getOrElse(c.str("graft.consumer.output.directory"))
+    val ticks = c.int("graft.dashboard.ticks")
+    val refreshSeconds = c.long("graft.dashboard.refreshSeconds")
+    val topK = c.int("graft.dashboard.topK")
+    val htmlFile = c.str("graft.dashboard.htmlFile")
+    val port = c.int("graft.dashboard.port")
+    val metricsDir = Some(c.str("graft.dashboard.metricsDir"))
       .filter(_.nonEmpty)
     val spark = graft.GraftSession.build("4")
     // the SERVED face (reference: Streamlit on :8501): every GET /

@@ -70,15 +70,14 @@ object MultiSink {
         keyA: String, tagA: String, keyB: String, tagB: String): Config = {
       // fallbacks come from the one Defaults map — a dropped resource
       // file cannot silently change behavior or drift from the docs
-      def d(k: String) = c.str(k, graft.GraftConfig.Defaults(k))
       Config(
-        outDir = d("graft.consumer.output.directory"),
-        checkpointDir = d("graft.consumer.output.checkpointDir"),
+        outDir = c.str("graft.consumer.output.directory"),
+        checkpointDir = c.str("graft.consumer.output.checkpointDir"),
         keyA = keyA, tagA = tagA, keyB = keyB, tagB = tagB,
-        format = d("graft.consumer.output.format"),
-        triggerSeconds = d("graft.consumer.output.triggerSeconds").toLong,
-        drainOnce = d("graft.consumer.output.drainOnce").toBoolean,
-        metricsDir = Some(d("graft.consumer.output.metricsDir"))
+        format = c.str("graft.consumer.output.format"),
+        triggerSeconds = c.long("graft.consumer.output.triggerSeconds"),
+        drainOnce = c.bool("graft.consumer.output.drainOnce"),
+        metricsDir = Some(c.str("graft.consumer.output.metricsDir"))
           .filter(_.nonEmpty))
     }
   }

@@ -27,25 +27,25 @@ object ProducerMain {
     * published. */
   def produce(spark: SparkSession, c: GraftConfig,
       bus: Option[EventBus] = None): Long = {
-    def d(k: String) = c.str(k, GraftConfig.Defaults(k))
     // the source is a file from outside the program (Tables.foreign);
     // its columns are cast to the bus's event schema, so a `ts` read as
     // timestamp_ntz publishes the same rows as one read as timestamp
-    val events = Tables.foreign(spark, d("graft.producer.data.sourceDir"),
-        d("graft.producer.data.table"))
+    val events = Tables.foreign(spark,
+        c.str("graft.producer.data.sourceDir"),
+        c.str("graft.producer.data.table"))
       .select(StreamSources.eventSchema.fields.map(f =>
         col(f.name).cast(f.dataType)): _*)
     // the row total comes from the ordinal's size pass: no count job
     val (prepared, total) =
       Replay.prepareCounted(events, Seq(col("ts"), col("event_id")))
-    val confBatch = d("graft.producer.data.batchSize").toLong
+    val confBatch = c.long("graft.producer.data.batchSize")
     val batchSize = if (confBatch > 0) confBatch else math.max(1L, total / 5)
     val nBatches = Replay.batchCount(total, batchSize)
-    bus.getOrElse(new FileBus(d("graft.producer.file.outputDir"),
-        format = d("graft.producer.file.format")))
+    bus.getOrElse(new FileBus(c.str("graft.producer.file.outputDir"),
+        format = c.str("graft.producer.file.format")))
       .publishBatches(prepared, batchSize, nBatches,
         intervalMillis =
-          d("graft.producer.data.intervalSeconds").toLong * 1000L)
+          c.long("graft.producer.data.intervalSeconds") * 1000L)
     nBatches
   }
 
@@ -58,8 +58,7 @@ object ProducerMain {
         pos.lift(1).map(b =>
           Map("graft.producer.file.outputDir" -> b)).getOrElse(Map.empty))
     val spark = graft.GraftSession.build(
-      c.str("graft.consumer.spark.shufflePartitions",
-        GraftConfig.Defaults("graft.consumer.spark.shufflePartitions")))
+      c.str("graft.consumer.spark.shufflePartitions"))
     try println(s"PRODUCED_BATCHES=${produce(spark, c)}")
     finally spark.stop()
   }
@@ -74,13 +73,12 @@ object ConsumerMain {
     * container shape). */
   def startConsumer(spark: SparkSession, c: GraftConfig,
       bus: Option[EventBus] = None): StreamingQuery = {
-    def d(k: String) = c.str(k, GraftConfig.Defaults(k))
-    val busDir = d("graft.producer.file.outputDir")
-    val watchDir = c.str("graft.consumer.source.directory", busDir)
+    val watchDir = c.str("graft.consumer.source.directory",
+      c.str("graft.producer.file.outputDir"))
     val stream = bus.getOrElse(new FileBus(watchDir,
-        format = d("graft.consumer.source.format"),
+        format = c.str("graft.consumer.source.format"),
         maxFilesPerTrigger =
-          d("graft.consumer.source.maxFilesPerTrigger").toInt))
+          c.int("graft.consumer.source.maxFilesPerTrigger")))
       .subscribe(spark)
     MultiSink.start(stream, MultiSink.Config.fromConf(c,
       keyA = "user_id", tagA = "pickup_location",
@@ -98,8 +96,7 @@ object ConsumerMain {
           "graft.consumer.output.checkpointDir" -> s"$o/_checkpoint"))
           .getOrElse(Map.empty))
     val spark = graft.GraftSession.build(
-      c.str("graft.consumer.spark.shufflePartitions",
-        GraftConfig.Defaults("graft.consumer.spark.shufflePartitions")))
+      c.str("graft.consumer.spark.shufflePartitions"))
     val q = startConsumer(spark, c)
     // AvailableNow self-terminates once caught up; ProcessingTime runs
     // until the container is stopped — both are one awaitTermination
@@ -109,8 +106,7 @@ object ConsumerMain {
     // rows (observed: a 3-trigger drain recorded 2). Settle until the
     // log's max batch_id reaches the query's last progress (bounded —
     // a wedged bus must not hang the drain-and-exit shape)
-    val metricsDir = c.str("graft.consumer.output.metricsDir",
-      GraftConfig.Defaults("graft.consumer.output.metricsDir"))
+    val metricsDir = c.str("graft.consumer.output.metricsDir")
     if (metricsDir.nonEmpty && q.lastProgress != null) {
       val want = q.lastProgress.batchId
       // filter by THIS query's runId: the metrics dir is append-only

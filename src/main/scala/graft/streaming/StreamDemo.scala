@@ -40,21 +40,19 @@ object StreamDemo {
     val c = GraftConfig.loadWithDefaults(args.find(_.endsWith(".conf")))
       .overlay(positionalOverrides(args.filterNot(_.endsWith(".conf")).toSeq))
     val spark = graft.GraftSession.build(
-      c.str("graft.consumer.spark.shufflePartitions",
-        GraftConfig.Defaults("graft.consumer.spark.shufflePartitions")))
+      c.str("graft.consumer.spark.shufflePartitions"))
     run(spark, c)
     spark.stop()
   }
 
   def run(spark: SparkSession, c: GraftConfig): Unit = {
     // every fallback resolves through the single Defaults map
-    def d(k: String) = c.str(k, GraftConfig.Defaults(k))
-    val sfDir = d("graft.producer.data.sourceDir")
-    val table = d("graft.producer.data.table")
-    val busDir = d("graft.producer.file.outputDir")
+    val sfDir = c.str("graft.producer.data.sourceDir")
+    val table = c.str("graft.producer.data.table")
+    val busDir = c.str("graft.producer.file.outputDir")
     val watchDir = c.str("graft.consumer.source.directory", busDir)
-    val processed = d("graft.consumer.output.directory")
-    val checkpoint = d("graft.consumer.output.checkpointDir")
+    val processed = c.str("graft.consumer.output.directory")
+    val checkpoint = c.str("graft.consumer.output.checkpointDir")
 
     // --- producer: slice the source table into ordered JSON batch drops
     // (the SAME body the standalone ProducerMain container runs)
@@ -78,7 +76,7 @@ object StreamDemo {
 
     // --- stateful operators smoke: session windows over the same bus
     val sess = StatefulSessions.sessions(
-      new FileBus(watchDir, format = d("graft.consumer.source.format"),
+      new FileBus(watchDir, format = c.str("graft.consumer.source.format"),
         maxFilesPerTrigger = 100).subscribe(spark),
       gapSeconds = 1800L, watermarkDelay = "0 seconds")
     val sq = sess.writeStream.outputMode("append").format("memory")

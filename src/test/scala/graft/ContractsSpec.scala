@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 
 /** Source-level contracts no runtime test would notice breaking: the
   * query registry and its oracle map stay key-for-key in step, and the
-  * operators depend only on their inputs and the session's conf — no
-  * process-global switches on the product path; and a schema the
-  * program declares, for its own output or for a fixture table it
-  * reads, is the one Spark infers from the file. */
+  * operators and registered queries depend only on their inputs and
+  * the session's conf — no process-global switches on the product
+  * path; and a schema the program declares, for its own output or for
+  * a fixture table it reads, is the one Spark infers from the file. */
 class ContractsSpec extends SparkSpec {
 
   test("every registered query has an oracle and every oracle a query") {
@@ -30,17 +30,20 @@ class ContractsSpec extends SparkSpec {
   private val processGlobalReads =
     """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r
 
+  // the operators and the registered queries built from them
   test("operators read no system property or environment variable") {
-    val dir = Paths.get("src/main/scala/graft/operators")
-    assert(Files.isDirectory(dir), s"run from the repo root: $dir")
-    val files = Files.walk(dir).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size >= 10, "operator sources not found")
-    val hits = for {
-      f <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if processGlobalReads.findFirstIn(line).isDefined
-    } yield s"${dir.relativize(f)}:${i + 1}: ${line.trim}"
+    val hits = Seq("operators", "registry").flatMap { pkg =>
+      val dir = Paths.get(s"src/main/scala/graft/$pkg")
+      assert(Files.isDirectory(dir), s"run from the repo root: $dir")
+      val files = Files.walk(dir).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+      assert(files.size >= 10, s"$pkg sources not found")
+      for {
+        f <- files
+        (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+        if processGlobalReads.findFirstIn(line).isDefined
+      } yield s"$pkg/${dir.relativize(f)}:${i + 1}: ${line.trim}"
+    }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -28,19 +28,20 @@ class GraftConfigSpec extends AnyFunSuite {
   test("parse: nesting, comments, quotes, separators, types") {
     val c = GraftConfig.parse(sample)
     assert(c.str("graft.producer.data.sourceDir", "") === "/data/sf1")
-    assert(c.long("graft.producer.data.batchSize", 0L) === 250L)
-    assert(c.long("graft.producer.data.intervalSeconds", 0L) === 5L)
+    assert(c.long("graft.producer.data.batchSize") === 250L)
+    assert(c.long("graft.producer.data.intervalSeconds") === 5L)
     assert(c.str("graft.producer.file.outputDir", "") === "/tmp/bus")
-    assert(c.bool("graft.consumer.output.drainOnce", false) === true)
+    assert(c.bool("graft.consumer.output.drainOnce") === true)
     assert(c.str("graft.consumer.output.format", "") === "parquet")
   }
 
   test("defaults apply for absent keys; overlay overrides win") {
     val c = GraftConfig.parse(sample)
     assert(c.str("graft.consumer.output.directory", "/fallback") === "/fallback")
-    assert(c.int("graft.consumer.source.maxFilesPerTrigger", 2) === 2)
+    // an absent key falls back to the code Defaults
+    assert(c.int("graft.consumer.source.maxFilesPerTrigger") === 2)
     val over = c.overlay(Map("graft.producer.data.batchSize" -> "9"))
-    assert(over.long("graft.producer.data.batchSize", 0L) === 9L)
+    assert(over.long("graft.producer.data.batchSize") === 9L)
     assert(over.str("graft.producer.data.sourceDir", "") === "/data/sf1")
   }
 
@@ -51,7 +52,7 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(c.strOpt("graft.producer.file.outputDir").nonEmpty)
     assert(c.strOpt("graft.consumer.source.directory").nonEmpty)
     assert(c.strOpt("graft.consumer.output.directory").nonEmpty)
-    assert(c.long("graft.consumer.output.triggerSeconds", -1L) >= 0L)
+    assert(c.long("graft.consumer.output.triggerSeconds") >= 0L)
   }
 
   test("site file overlays bundled defaults; missing file = defaults") {
@@ -90,5 +91,29 @@ class GraftConfigSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](GraftConfig.parse("a { b = 1"))
     assertThrows[IllegalArgumentException](GraftConfig.parse("}"))
     assertThrows[IllegalArgumentException](GraftConfig.parse("a { novalue }"))
+  }
+
+  test("a malformed long, int or boolean fails, naming the key and the value") {
+    val bad = GraftConfig.loadWithDefaults(None).overlay(Map(
+      "graft.consumer.output.triggerSeconds" -> "1s",
+      "graft.consumer.source.maxFilesPerTrigger" -> "2.5",
+      "graft.consumer.output.drainOnce" -> "yes"))
+    def failure(f: => Any): String =
+      intercept[IllegalArgumentException](f).getMessage
+    val long = failure(bad.long("graft.consumer.output.triggerSeconds"))
+    assert(long.contains("graft.consumer.output.triggerSeconds") &&
+      long.contains("'1s'"), long)
+    val int = failure(bad.int("graft.consumer.source.maxFilesPerTrigger"))
+    assert(int.contains("graft.consumer.source.maxFilesPerTrigger") &&
+      int.contains("'2.5'"), int)
+    val bool = failure(bad.bool("graft.consumer.output.drainOnce"))
+    assert(bool.contains("graft.consumer.output.drainOnce") &&
+      bool.contains("'yes'"), bool)
+    // the sink's config reader is one such caller
+    val sink = failure(graft.streaming.MultiSink.Config.fromConf(bad,
+      keyA = "user_id", tagA = "a", keyB = "event_type", tagB = "b"))
+    assert(sink.contains("graft.consumer.output.triggerSeconds"), sink)
+    // a key with neither a value nor a default is named too
+    assert(failure(bad.str("graft.no.such.key")).contains("graft.no.such.key"))
   }
 }

@@ -151,6 +151,37 @@ class MaintainedTableSpec extends SparkSpec {
     assert(sorted(MaintainedTable.snapshotAt(spark, d, 2L)) === once)
   }
 
+  test("partitioned: sequential per-batch apply == one-shot apply of the unioned feed") {
+    val d = dir("partcompose")
+    val keys = Seq("k")
+    val f0 = feed((2L, "B", 21.0, 1L, "upsert"), (4L, "d", 40.0, 2L, "upsert"))
+    val f1 = feed((2L, "-", 0.0, 3L, "delete"), (9L, "z", 90.0, 4L, "upsert"))
+    MaintainedTable.bootstrap(base, keys, d, "r", nParts = 4)
+    MaintainedTable.applyBatchPartitioned(f0, keys, Seq(col("seq")),
+      d, "r", 0L, nParts = 4)
+    MaintainedTable.applyBatchPartitioned(f1, keys, Seq(col("seq")),
+      d, "r", 1L, nParts = 4)
+    val oneShot = Incremental.applyChangeLog(base, f0.unionByName(f1),
+      keys, Seq(col("seq")))
+    assert(sorted(MaintainedTable.snapshotAt(spark, d, 2L)) ===
+      sorted(oneShot))
+  }
+
+  test("partitioned: a different run against surviving state fails loudly") {
+    val d = dir("partrunid")
+    val keys = Seq("k")
+    MaintainedTable.bootstrap(base, keys, d, "run-a", nParts = 4)
+    MaintainedTable.applyBatchPartitioned(
+      feed((2L, "B", 21.0, 1L, "upsert")), keys, Seq(col("seq")),
+      d, "run-a", 0L, nParts = 4)
+    val e = intercept[IllegalStateException] {
+      MaintainedTable.applyBatchPartitioned(
+        feed((3L, "C", 31.0, 1L, "upsert")), keys, Seq(col("seq")),
+        d, "run-b", 0L, nParts = 4)
+    }
+    assert(e.getMessage.contains("run-a"))
+  }
+
   test("partitioned: empty initial bootstraps via the schema anchor; inserts land") {
     val d = dir("partempty")
     val keys = Seq("k")
@@ -184,6 +215,9 @@ class MaintainedTableSpec extends SparkSpec {
     assert(MaintainedTable.vacuumPartitioned(spark, d, keepLast = 1)
       === Seq(0L, 1L))
     assert(MaintainedTable.committedVersions(spark, d) === Seq(2L))
+    intercept[IllegalArgumentException] { // a vacuumed version fails loudly
+      MaintainedTable.snapshotAt(spark, d, 0L)
+    }
     assert(sorted(MaintainedTable.latestPartitioned(spark, d).get._2)
       === before)
   }

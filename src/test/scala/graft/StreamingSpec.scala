@@ -71,50 +71,17 @@ class StreamingSpec extends SparkSpec {
     val name = fresh()
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("complete").start()
-    in.addData(TestEvt(1, ts("2024-01-01 00:00:00"), "click", 1.5))
+    in.addData(TestEvt(1, ts("2024-01-01 00:00:00"), "click", 1.5),
+      TestEvt(2, ts("2024-01-01 00:00:00"), "view", 10.0))
     q.processAllAvailable()
     in.addData(TestEvt(1, ts("2024-01-01 00:10:00"), "view", 2.5))
     q.processAllAvailable()
     q.stop()
     val rows = spark.table(name).select("user_id", "n_events", "sum_value")
       .as[(Long, Long, Double)].collect().toSet
-    assert(rows === Set((1L, 2L, 4.0))) // state carried across batches
-  }
-
-  test("transformWithState running totals accumulate across batches") {
-    implicit val ctx = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[TestEvt]
-      val out = graft.streaming.StatefulTotals.runningTotals[TestEvt](
-        in.toDS(), _.user_id, _.value)
-      val name = fresh()
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      in.addData(TestEvt(1, ts("2024-01-01 00:00:00"), "click", 1.5),
-        TestEvt(2, ts("2024-01-01 00:00:00"), "view", 10.0))
-      q.processAllAvailable()
-      in.addData(TestEvt(1, ts("2024-01-01 00:10:00"), "view", 2.5))
-      q.processAllAvailable()
-      q.stop()
-      // update mode: latest row per key wins
-      val rows = spark.table(name)
-        .groupBy(col("key")).agg(
-          org.apache.spark.sql.functions.max("n_events").as("n"),
-          org.apache.spark.sql.functions.max("sum_value").as("s"))
-        .as[(Long, Long, Double)].collect().toSet
-      assert(rows === Set((1L, 2L, 4.0), (2L, 1L, 10.0)))
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    // state carried across batches; a key the second batch misses keeps
+    // its totals
+    assert(rows === Set((1L, 2L, 4.0), (2L, 1L, 10.0)))
   }
 
   test("dedupWithinWatermark drops in-horizon duplicates") {
