@@ -80,7 +80,6 @@ object GraftConfig {
     // non-empty = read the StreamMetrics parquet log here and render
     // the "stream freshness" panel (latest batch + lag per query run)
     "graft.dashboard.metricsDir" -> "",
-    "graft.consumer.spark.appName" -> "graft-stream",
     "graft.consumer.spark.shufflePartitions" -> "8",
     "graft.consumer.source.directory" -> "/tmp/graft_stream_demo/incoming",
     "graft.consumer.source.format" -> "json",

@@ -28,11 +28,6 @@ object Dashboard {
       .sorted(Ordering[Long].reverse).take(n)
   }
 
-  /** Latest `n` stamped batch ids (the `batch_000042` display form). */
-  def latestBatchIds(spark: SparkSession, datasetDir: String,
-      n: Int): Seq[String] =
-    latestBatchNumbers(spark, datasetDir, n).map(StreamOps.formatBatchId)
-
   /** The newest `n` batches of a dataset, batch id attached. Only the
     * selected directories are ever read — true pruning by path, not a
     * filter over the full dataset. A declared `schema` skips the
@@ -145,12 +140,6 @@ object Dashboard {
     main ++ freshness
   }
 
-  /** The three panels rendered as console text. */
-  def renderPanels(spark: SparkSession, processedDir: String,
-      nBatches: Int = 2, topK: Int = 10, previewRows: Int = 10): String =
-    renderPanelsText(
-      collectPanels(spark, processedDir, nBatches, topK, previewRows))
-
   /** Render already-collected panels as console text — so a caller
     * emitting BOTH faces (console + HTML) runs the panel Spark jobs
     * once per tick and renders twice from the same Seq[Panel]. */
@@ -167,22 +156,12 @@ object Dashboard {
         }.mkString("\n") + "\n"
     }.mkString
 
-  /** The three panels as a self-contained HTML page — the engine-side
-    * analog of the reference's auto-refreshing Streamlit UI
+  /** Already-collected panels as a self-contained HTML page — the
+    * engine-side analog of the reference's auto-refreshing Streamlit UI
     * (taxi_dashboard.py:127-206 + its 5 s rerun loop): a
     * `<meta http-equiv="refresh">` tag makes any static file server —
     * or a file:// URL — a live dashboard over a MultiSink output root.
     * Values are HTML-escaped; bars are proportional-width divs. */
-  def renderHtml(spark: SparkSession, processedDir: String,
-      nBatches: Int = 2, topK: Int = 10, previewRows: Int = 10,
-      refreshSeconds: Long = 5L,
-      metricsDir: Option[String] = None): String =
-    renderHtmlFromPanels(
-      collectPanels(spark, processedDir, nBatches, topK, previewRows,
-        metricsDir),
-      refreshSeconds)
-
-  /** HTML face over already-collected panels (see [[renderPanelsText]]). */
   def renderHtmlFromPanels(panels: Seq[Panel],
       refreshSeconds: Long = 5L): String = {
     val body = panels.map {
@@ -280,8 +259,9 @@ object Dashboard {
                 // cache: metrics rows advance exactly when batches do,
                 // and a cached page's lag_s only ages by the client's
                 // own refresh period
-                val h = renderHtml(spark, processedDir, nBatches, topK,
-                  previewRows, refreshSeconds, metricsDir)
+                val h = renderHtmlFromPanels(collectPanels(spark,
+                  processedDir, nBatches, topK, previewRows, metricsDir),
+                  refreshSeconds)
                 cached = Some((key, h))
                 h
             }

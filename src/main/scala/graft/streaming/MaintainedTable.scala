@@ -343,23 +343,6 @@ object MaintainedTable {
     doomed
   }
 
-  /** Name the query + attach the name-filtered [[StreamMetrics]]
-    * listener when a metrics dir is configured (the MultiSink.start
-    * convention — attach before start so batch 0 of a fast drain is
-    * never lost). */
-  private def withMetrics(stream: DataFrame, prefix: String,
-      metricsDir: Option[String])
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    val queryName = metricsDir.map { dir =>
-      val name = prefix + java.util.UUID.randomUUID().toString.take(8)
-      StreamMetrics.attach(stream.sparkSession, dir,
-        onlyName = Some(name), detachOnTerminate = true)
-      name
-    }
-    queryName.foldLeft(stream.writeStream)(_ queryName _)
-  }
-
   /** Start the partitioned maintained-table query. `initial` is
     * bootstrapped on the first batch if needed; each micro-batch then
     * rewrites only its touched partitions. `sink` receives the current
@@ -370,7 +353,7 @@ object MaintainedTable {
       runId: String, nParts: Int, opCol: String = "op",
       deleteOp: String = "delete", metricsDir: Option[String] = None)(
       sink: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    withMetrics(stream, "graft_maintained_p_", metricsDir)
+    StreamMetrics.writeStream(stream, "graft_maintained_p_", metricsDir)
       .outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         bootstrap(initial, keys, tableDir, runId, nParts)
@@ -391,7 +374,7 @@ object MaintainedTable {
       opCol: String = "op", deleteOp: String = "delete",
       metricsDir: Option[String] = None)(
       sink: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    withMetrics(stream, "graft_maintained_", metricsDir)
+    StreamMetrics.writeStream(stream, "graft_maintained_", metricsDir)
       .outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         val state = applyBatch(initial, batch, keys, ord, tableDir,

@@ -151,18 +151,7 @@ object MultiSink {
       df.write.mode("overwrite").format(cfg.format)
         .save(s"${cfg.outDir}/$name/batch_id=$batchId")
 
-    // metrics listener attaches BEFORE start (name-filtered — the
-    // query id only exists after start, and a fast AvailableNow drain
-    // can complete batch 0 before a post-start attach would land)
-    val queryName = cfg.metricsDir.map { dir =>
-      val name = "graft_multisink_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      StreamMetrics.attach(stream.sparkSession, dir,
-        onlyName = Some(name), detachOnTerminate = true)
-      name
-    }
-    val named = queryName.foldLeft(stream.writeStream)(_ queryName _)
-    named
+    StreamMetrics.writeStream(stream, "graft_multisink_", cfg.metricsDir)
       .outputMode("append")
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{DataStreamWriter,
+  StreamingQueryListener}
 
 /** Engine-side streaming observability: a
   * [[StreamingQueryListener]] that records one row per micro-batch to
@@ -23,8 +24,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *
   * Attachment is BY QUERY NAME, not id: the id exists only after
   * `.start()` returns, and attaching afterwards can lose batch 0 of a
-  * fast drain — so [[MultiSink.start]] names its query first, then
-  * attaches the name-filtered listener, then starts.
+  * fast drain — so [[writeStream]] names the query and attaches the
+  * name-filtered listener before the caller starts it.
   */
 object StreamMetrics {
 
@@ -38,78 +39,54 @@ object StreamMetrics {
       name: String, batch_id: Long, trigger_ts: java.sql.Timestamp,
       rows: Long, wall_ms: Long, state_rows: Long)
 
-  /** Build and register a listener appending every progress event —
-    * optionally only those whose query NAME matches — to
-    * `metricsDir`. Returns the listener for [[detach]];
-    * `detachOnTerminate` self-removes when one of ITS queries
-    * terminates — a query it recorded progress for, or (name-filtered)
-    * one it saw START under the watched name, so a name-filtered
-    * listener whose query dies before its first progress event still
-    * detaches instead of accumulating idle under repeated attaches; an
-    * unfiltered listener never detaches on a query it did not record
-    * (detaching on arbitrary terminations would silently remove a
-    * listener observing several queries when the first unrelated one
-    * stopped). The residual case: an UNFILTERED
-    * detachOnTerminate listener whose only query fails before any
-    * progress stays attached (it cannot tell that query from an
-    * unrelated one) — prefer onlyName when detachOnTerminate matters,
-    * or detach explicitly. */
-  def attach(spark: SparkSession, metricsDir: String,
-      onlyName: Option[String] = None,
-      detachOnTerminate: Boolean = false): StreamingQueryListener = {
-    val listener = new StreamingQueryListener {
-      private val myIds =
-        java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+  /** `stream.writeStream`, and with a `metricsDir`, named
+    * `namePrefix` + a random suffix, with a listener registered BEFORE
+    * the caller starts it that appends each progress event of that
+    * query name to `metricsDir` and removes itself when the query
+    * terminates. The query claims its id on the started event, which
+    * carries the name, so a query that dies before its first progress
+    * event still detaches the listener. */
+  def writeStream(stream: DataFrame, namePrefix: String,
+      metricsDir: Option[String]): DataStreamWriter[Row] =
+    metricsDir.fold(stream.writeStream) { dir =>
+      val spark = stream.sparkSession
+      val name = namePrefix + java.util.UUID.randomUUID().toString.take(8)
+      spark.streams.addListener(new StreamingQueryListener {
+        @volatile private var queryId: java.util.UUID = null
 
-      override def onQueryStarted(
-          event: StreamingQueryListener.QueryStartedEvent): Unit =
-        // the started event carries the name, so a name-filtered
-        // listener claims its query BEFORE any progress arrives —
-        // progress-less terminations then detach like any other
-        if (onlyName.contains(Option(event.name).getOrElse("")))
-          { myIds.add(event.id); () }
+        override def onQueryStarted(
+            event: StreamingQueryListener.QueryStartedEvent): Unit =
+          if (event.name == name) queryId = event.id
 
-      override def onQueryProgress(
-          event: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = event.progress
-        if (onlyName.forall(_ == Option(p.name).getOrElse(""))) {
-          myIds.add(p.id)
-          val wall = Option(p.durationMs.get("triggerExecution"))
-            .map(_.longValue()).getOrElse(0L)
-          val stateRows =
-            if (p.stateOperators == null) 0L
-            else p.stateOperators.map(_.numRowsTotal).sum
-          val ts = java.sql.Timestamp.from(
-            java.time.Instant.parse(p.timestamp))
-          val row = BatchMetric(p.id.toString, p.runId.toString,
-            Option(p.name).getOrElse(""), p.batchId, ts,
-            p.numInputRows, wall, stateRows)
-          // a metrics hiccup must never kill the listener bus or the
-          // query it observes — log and carry on
-          try spark.createDataFrame(Seq(row))
-            .write.mode("append").parquet(metricsDir)
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[stream-metrics] append failed: $e")
+        override def onQueryProgress(
+            event: StreamingQueryListener.QueryProgressEvent): Unit = {
+          val p = event.progress
+          if (p.name == name) {
+            val wall = Option(p.durationMs.get("triggerExecution"))
+              .map(_.longValue()).getOrElse(0L)
+            val stateRows =
+              if (p.stateOperators == null) 0L
+              else p.stateOperators.map(_.numRowsTotal).sum
+            val ts = java.sql.Timestamp.from(
+              java.time.Instant.parse(p.timestamp))
+            val row = BatchMetric(p.id.toString, p.runId.toString, name,
+              p.batchId, ts, p.numInputRows, wall, stateRows)
+            // a metrics hiccup must never kill the listener bus or the
+            // query it observes — log and carry on
+            try spark.createDataFrame(Seq(row))
+              .write.mode("append").parquet(dir)
+            catch { case scala.util.control.NonFatal(e) =>
+              System.err.println(s"[stream-metrics] append failed: $e")
+            }
           }
         }
-      }
 
-      override def onQueryTerminated(
-          event: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        // detach ONLY on a query this listener claimed — an unfiltered
-        // listener observing several queries must not vanish when the
-        // first unrelated one stops
-        if (detachOnTerminate && myIds.contains(event.id))
-          spark.streams.removeListener(this)
+        override def onQueryTerminated(
+            event: StreamingQueryListener.QueryTerminatedEvent): Unit =
+          if (event.id == queryId) spark.streams.removeListener(this)
+      })
+      stream.writeStream.queryName(name)
     }
-    spark.streams.addListener(listener)
-    listener
-  }
-
-  /** Unregister a listener returned by [[attach]]. */
-  def detach(spark: SparkSession,
-      listener: StreamingQueryListener): Unit =
-    spark.streams.removeListener(listener)
 
   /** The freshness view over a metrics log: latest batch per query
     * run — (name, batch_id, trigger_ts, rows, wall_ms, state_rows,

@@ -10,17 +10,17 @@ import org.apache.spark.sql.functions._
   */
 object StreamOps {
 
+  /** Canonical stamped batch-id string — the ONE formatter shared by
+    * the metadata stamp, the multi-sink counts, and the dashboard
+    * (divergent formats would break the dashboard's id matching). */
+  def formatBatchId(batchId: Long): String = f"batch_$batchId%06d"
+
   /** Per-micro-batch metadata stamp. The reference computes the batch id
     * ONCE at plan-construction time and injects it as a literal
     * (consumer/StreamProcessor.scala:34-38) — a run id, not a batch id.
     * The correct form takes foreachBatch's batchId argument; the column
     * contract (batch_id string + processing_time) is preserved.
     */
-  /** Canonical stamped batch-id string — the ONE formatter shared by
-    * the metadata stamp, the multi-sink counts, and the dashboard
-    * (divergent formats would break the dashboard's id matching). */
-  def formatBatchId(batchId: Long): String = f"batch_$batchId%06d"
-
   def stampBatchMeta(df: DataFrame, batchId: Long): DataFrame =
     df.withColumn("batch_id", lit(formatBatchId(batchId)))
       .withColumn("processing_time", current_timestamp())

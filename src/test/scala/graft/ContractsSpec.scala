@@ -27,22 +27,29 @@ class ContractsSpec extends SparkSpec {
     assert(Query.requireUniqueNames(Seq(q)) === Seq(q))
   }
 
+  private def scalaFiles(root: String): Seq[java.nio.file.Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"run from the repo root: $dir")
+    Files.walk(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+  }
+
+  private def linesOf(f: java.nio.file.Path): Seq[String] =
+    Files.readAllLines(f).asScala.toSeq
+
   private val processGlobalReads =
     """sys\.props|sys\.env|System\.getProperty|System\.getenv""".r
 
   // the operators and the registered queries built from them
   test("operators read no system property or environment variable") {
     val hits = Seq("operators", "registry").flatMap { pkg =>
-      val dir = Paths.get(s"src/main/scala/graft/$pkg")
-      assert(Files.isDirectory(dir), s"run from the repo root: $dir")
-      val files = Files.walk(dir).iterator().asScala
-        .filter(_.toString.endsWith(".scala")).toSeq
+      val files = scalaFiles(s"src/main/scala/graft/$pkg")
       assert(files.size >= 10, s"$pkg sources not found")
       for {
         f <- files
-        (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+        (line, i) <- linesOf(f).zipWithIndex
         if processGlobalReads.findFirstIn(line).isDefined
-      } yield s"$pkg/${dir.relativize(f)}:${i + 1}: ${line.trim}"
+      } yield s"$f:${i + 1}: ${line.trim}"
     }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
@@ -51,6 +58,69 @@ class ContractsSpec extends SparkSpec {
     Seq("""sys.props.get("k")""", """sys.env.getOrElse("K", "")""",
         """System.getProperty("k")""", """System.getenv("K")""")
       .foreach(l => assert(processGlobalReads.findFirstIn(l).isDefined, l))
+  }
+
+  // a member def of a top-level object: two-space indent, not private
+  private val memberDef =
+    """^  (?:final |@inline |implicit )*def ([A-Za-z_]\w*)""".r
+  private val defName = """\bdef ([A-Za-z_]\w*)""".r
+  private val identifier = """[A-Za-z_]\w*""".r
+
+  private def isCode(line: String): Boolean = {
+    val t = line.trim
+    !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+  }
+
+  /** (name, where) of each public member def of a top-level object. */
+  private def publicObjectDefs(file: String,
+      lines: Seq[String]): Seq[(String, String)] = {
+    var inObject = false
+    lines.zipWithIndex.flatMap { case (line, i) =>
+      if (line.headOption.exists(_.isLetter))
+        inObject = line.matches("""(?:case |final )*object \w.*""")
+      if (!inObject) None
+      else memberDef.findFirstMatchIn(line)
+        .map(m => (m.group(1), s"$file:${i + 1}"))
+    }
+  }
+
+  /** The defs whose name no code line uses outside a def of that name.
+    * `main` is exempt: the JVM calls it. */
+  private def unreferenced(defs: Seq[(String, String)],
+      corpus: Seq[String]): Seq[String] = {
+    val used = corpus.filter(isCode).flatMap { line =>
+      identifier.findAllIn(line).toSet --
+        defName.findAllMatchIn(line).map(_.group(1))
+    }.toSet
+    defs.collect { case (n, at) if n != "main" && !used(n) => s"$at: $n" }
+  }
+
+  test("every public def of an object in src/main has a caller or a " +
+      "test") {
+    val defs = scalaFiles("src/main/scala/graft")
+      .flatMap(f => publicObjectDefs(f.toString, linesOf(f)))
+    assert(defs.size >= 400, s"object defs not found: ${defs.size}")
+    val corpus = Seq("src/main", "src/test", "perfbench/src")
+      .flatMap(scalaFiles).flatMap(linesOf)
+    val hits = unreferenced(defs, corpus)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the caller lint flags an unreferenced def (anti-vacuity)") {
+    val defs = publicObjectDefs("Fake.scala", Seq(
+      "object Fake {",
+      "  def neverCalled(x: Int): Int = x",
+      "  private def hidden(): Unit = ()",
+      "  def called(): Unit = ()",
+      "  def main(args: Array[String]): Unit = ()",
+      "}",
+      "class Other {",
+      "  def notAnObjectMember(): Unit = ()",
+      "}"))
+    assert(defs.map(_._1) === Seq("neverCalled", "called", "main"))
+    val corpus = Seq("Fake.called()", "  // neverCalled in a comment",
+      "  * neverCalled in a doc line", "  def neverCalled(y: Long) = y")
+    assert(unreferenced(defs, corpus) === Seq("Fake.scala:2: neverCalled"))
   }
 
   test("MultiSink's declared aggregate schema is the one Spark infers " +

@@ -265,8 +265,9 @@ class DedupSpec extends SparkSpec {
     val corpus = all.filter(col("doc_id") < 10)
     val fresh = all.filter(col("doc_id") >= 10)
     val index = Dedup.simhashBandIndex(corpus, "doc_id", "text")
-    val got = Dedup.incrementalNearDups(fresh, index, "doc_id", "text")
-      .as[(Long, Long, Long)].collect().toSet
+    val hits = Dedup.incrementalNearDups(fresh, index, "doc_id", "text")
+    assert(hits.columns.toSeq === Seq("new_id", "dup_of", "hamming_dist"))
+    val got = hits.as[(Long, Long, Long)].collect().toSet
     // brute force: every (new, corpus) signature pair within 3 bits
     val sig = Dedup.simhashPortable(all, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
@@ -569,8 +570,11 @@ class DedupSpec extends SparkSpec {
       (4L, "one two three four five six seven"),
       (5L, "completely unrelated words here instead now"))
       .toDF("doc_id", "text")
-    val out = Dedup.lshRecallReport(docs, "doc_id", "text",
-      minJaccard = 0.5, k = 16, bands = 4, floorPct = 90).collect().head
+    val report = Dedup.lshRecallReport(docs, "doc_id", "text",
+      minJaccard = 0.5, k = 16, bands = 4, floorPct = 90)
+    assert(report.columns.toSeq ===
+      Seq("n_true", "n_candidates", "n_hit", "recall_ok"))
+    val out = report.collect().head
     assert(out.getLong(0) == 2L) // n_true: the two identical pairs
     assert(out.getLong(2) == 2L) // n_hit: identical sigs always collide
     assert(out.getLong(1) >= 2L) // candidates at least cover them

@@ -167,6 +167,15 @@ class RelationalSpec extends SparkSpec {
     assert(out.toSeq === Seq((10, 10L), (9, 9L), (8, 8L)))
   }
 
+  test("capPerKey keeps the first n rows of each key in the given order") {
+    val events = (1 to 20).map(i => (i.toLong, i % 3, i.toDouble))
+      .toDF("id", "k", "v")
+    val out = Relational.capPerKey(events, "k", Seq(col("id")), 2)
+    assert(out.count() === 6L)
+    assert(out.select("id", "rn").as[(Long, Long)].collect().toSet ===
+      Set((3L, 1L), (6L, 2L), (1L, 1L), (4L, 2L), (2L, 1L), (5L, 2L)))
+  }
+
   test("groupedQuantiles matches the built-in percentile() bit-for-bit") {
     val rnd = new scala.util.Random(7)
     val df = (1 to 400).map(i =>

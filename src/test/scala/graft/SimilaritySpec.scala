@@ -339,6 +339,7 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Int, Seq[Int])].collect().toSet
     val rebuilt = Similarity.buildIvfPqIndex(all, coarse, cb,
       "vec_id", "embedding")
+    assert(rebuilt.columns.toSeq === Seq("corpus_id", "cell", "codes"))
     val advanced = Similarity.advanceIvfPqIndex(
       Similarity.buildIvfPqIndex(a, coarse, cb, "vec_id", "embedding"),
       b, coarse, cb, "vec_id", "embedding")

@@ -93,7 +93,8 @@ class StreamPipelineSpec extends SparkSpec {
     // dashboard source: latest-N batches by batch id, top locations
     import graft.streaming.Dashboard
     val pickupDir = s"$base/run1/processed/pickup_agg"
-    assert(Dashboard.latestBatchIds(spark, pickupDir, 2) ===
+    assert(Dashboard.latestBatchNumbers(spark, pickupDir, 2)
+      .map(graft.streaming.StreamOps.formatBatchId) ===
       Seq("batch_000002", "batch_000001"))
     val top = Dashboard.topLocations(spark, pickupDir, 3, 3)
       .as[(String, Long)].collect()
@@ -226,7 +227,8 @@ class StreamPipelineSpec extends SparkSpec {
 
     // the console dashboard renders its three panels over this output:
     // raw preview header + both top-location bar charts with real bars
-    val panels = Dashboard.renderPanels(spark, s"$base/run/processed")
+    val collected = Dashboard.collectPanels(spark, s"$base/run/processed")
+    val panels = Dashboard.renderPanelsText(collected)
     assert(panels.contains("latest trips (2 batches, 20 rows)"))
     assert(panels.contains("top pickup locations"))
     assert(panels.contains("top dropoff locations"))
@@ -235,8 +237,7 @@ class StreamPipelineSpec extends SparkSpec {
 
     // the HTML face of the SAME panels: auto-refresh tag, a table row
     // per preview row, a proportional bar div per location
-    val html = Dashboard.renderHtml(spark, s"$base/run/processed",
-      refreshSeconds = 7L)
+    val html = Dashboard.renderHtmlFromPanels(collected, refreshSeconds = 7L)
     assert(html.contains("""<meta http-equiv="refresh" content="7">"""))
     assert(html.contains("latest trips (2 batches, 20 rows)"))
     assert(html.contains("<th>batch_id</th>"))
@@ -246,9 +247,10 @@ class StreamPipelineSpec extends SparkSpec {
 
   test("dashboard renders 'no batches yet' on an empty output root") {
     val empty = Files.createTempDirectory("graft_dash_empty").toString
-    val panels = Dashboard.renderPanels(spark, empty)
+    val collected = Dashboard.collectPanels(spark, empty)
+    val panels = Dashboard.renderPanelsText(collected)
     assert(panels.linesIterator.count(_.contains("no batches yet")) === 3)
-    val html = Dashboard.renderHtml(spark, empty)
+    val html = Dashboard.renderHtmlFromPanels(collected)
     assert(html.sliding(17).count(_ == "no batches yet</p") === 3)
   }
 
@@ -292,7 +294,7 @@ class StreamPipelineSpec extends SparkSpec {
 
       // SNAPSHOT SERVING: the frontier hasn't moved, so rapid repeat
       // GETs return the byte-identical rendered page (the embedded
-      // render timestamp included — proof renderHtml never re-ran) and
+      // render timestamp included — proof the page was not re-rendered) and
       // start zero additional Spark jobs
       val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -491,26 +493,22 @@ class StreamPipelineSpec extends SparkSpec {
     // stateful leg: running per-user totals over the same drop —
     // user_id domain is BOUNDED (ids mod 5), so its state must
     // plateau, not grow with batches
-    val stateName = "graft_soak_stateful"
-    val listener = StreamMetrics.attach(spark, metricsDir,
-      onlyName = Some(stateName))
-    val sq = StreamSources.fileStream(spark, s"$base/incoming/*",
-      maxFilesPerTrigger = 1)
-      .groupBy(col("user_id")).count()
-      .writeStream.queryName(stateName).outputMode("update")
+    val statePrefix = "graft_soak_stateful_"
+    val sq = StreamMetrics.writeStream(
+        StreamSources.fileStream(spark, s"$base/incoming/*",
+          maxFilesPerTrigger = 1).groupBy(col("user_id")).count(),
+        statePrefix, Some(metricsDir))
+      .outputMode("update")
       .option("checkpointLocation", s"$base/state_checkpoint")
       .format("noop").start()
     try { q.processAllAvailable(); sq.processAllAvailable() }
     finally { q.stop(); sq.stop() }
-    // async listener appends — settle until both legs' rows land,
-    // THEN detach (detaching first can drop the final batches' rows —
-    // the ServiceMains drain lesson)
+    // async listener appends — settle until both legs' rows land
     val deadline = System.currentTimeMillis() + 120000
     while (System.currentTimeMillis() < deadline &&
         scala.util.Try(spark.read.parquet(metricsDir).count())
           .getOrElse(0L) < 2L * nBatches)
       Thread.sleep(200)
-    StreamMetrics.detach(spark, listener)
     val m = spark.read.parquet(metricsDir)
       .select("name", "batch_id", "wall_ms", "state_rows")
       .as[(String, Long, Long, Long)].collect()
@@ -518,7 +516,7 @@ class StreamPipelineSpec extends SparkSpec {
     // load drops nothing
     val sink = m.filter(_._1.startsWith("graft_multisink_"))
       .sortBy(_._2)
-    val state = m.filter(_._1 == stateName).sortBy(_._2)
+    val state = m.filter(_._1.startsWith(statePrefix)).sortBy(_._2)
     assert(sink.map(_._2).toSeq === (0L until nBatches).toSeq,
       s"multisink leg recorded ${sink.length}/$nBatches batches")
     assert(state.map(_._2).toSeq === (0L until nBatches).toSeq,
@@ -562,31 +560,32 @@ class StreamPipelineSpec extends SparkSpec {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = Files.createTempDirectory("graft_state_metrics").toString
     val in = MemoryStream[(Long, String)]
-    val name = "graft_state_metrics_q"
-    val listener = StreamMetrics.attach(spark, s"$base/metrics",
-      onlyName = Some(name))
+    val listeners = spark.streams.listListeners().length
+    val q = StreamMetrics.writeStream(
+        in.toDF().toDF("user_id", "event_type")
+          .groupBy(col("user_id")).count(),
+        "graft_state_metrics_", Some(s"$base/metrics"))
+      .outputMode("update")
+      .option("checkpointLocation", s"$base/checkpoint")
+      .format("noop").start()
+    assert(spark.streams.listListeners().length === listeners + 1)
     try {
-      val q = in.toDF().toDF("user_id", "event_type")
-        .groupBy(col("user_id")).count()
-        .writeStream.queryName(name).outputMode("update")
-        .option("checkpointLocation", s"$base/checkpoint")
-        .format("noop").start()
-      try {
-        in.addData((1L, "a"), (2L, "b"), (1L, "c"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val deadline = System.currentTimeMillis() + 60000
-      while (System.currentTimeMillis() < deadline &&
-          scala.util.Try(spark.read.parquet(s"$base/metrics").count())
-            .getOrElse(0L) < 1L)
-        Thread.sleep(200)
-      val m = spark.read.parquet(s"$base/metrics")
-        .select("state_rows", "rows").as[(Long, Long)].collect()
-      assert(m.nonEmpty)
-      // two distinct user keys live in the state store
-      assert(m.map(_._1).max === 2L,
-        s"stateful query must report state rows: ${m.toSeq}")
-    } finally StreamMetrics.detach(spark, listener)
+      in.addData((1L, "a"), (2L, "b"), (1L, "c"))
+      q.processAllAvailable()
+    } finally q.stop()
+    // the listener removes itself once its query terminates
+    assert(within(60)(spark.streams.listListeners().length == listeners))
+    val deadline = System.currentTimeMillis() + 60000
+    while (System.currentTimeMillis() < deadline &&
+        scala.util.Try(spark.read.parquet(s"$base/metrics").count())
+          .getOrElse(0L) < 1L)
+      Thread.sleep(200)
+    val m = spark.read.parquet(s"$base/metrics")
+      .select("state_rows", "rows").as[(Long, Long)].collect()
+    assert(m.nonEmpty)
+    // two distinct user keys live in the state store
+    assert(m.map(_._1).max === 2L,
+      s"stateful query must report state rows: ${m.toSeq}")
   }
 
   /** Part files directly under a batch directory. */

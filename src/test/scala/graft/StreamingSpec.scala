@@ -101,6 +101,35 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table(name).count() === 2L)
   }
 
+  test("sessionWindows emits a key's session once the watermark passes " +
+      "its end, splitting on the gap") {
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[TestEvt]
+    val out = StreamOps.sessionWindows(in.toDF(), "ts", "user_id",
+      "10 minutes", "0 seconds")
+    val name = fresh()
+    val q = out.writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    def rows(): Set[(Timestamp, Timestamp, Long, Long)] =
+      spark.table(name)
+        .select("session_start", "session_end", "user_id", "n_events")
+        .as[(Timestamp, Timestamp, Long, Long)].collect().toSet
+    in.addData(
+      TestEvt(1, ts("2024-01-01 00:00:00"), "click", 1.0),
+      TestEvt(1, ts("2024-01-01 00:05:00"), "click", 1.0),
+      TestEvt(2, ts("2024-01-01 00:02:00"), "view", 1.0))
+    q.processAllAvailable()
+    assert(rows() === Set.empty) // watermark 00:05: both sessions open
+    // 25 min after user 1's last event: a new session for user 1, and
+    // the watermark (00:30) passes both first sessions' ends
+    in.addData(TestEvt(1, ts("2024-01-01 00:30:00"), "click", 1.0))
+    q.processAllAvailable()
+    q.stop()
+    assert(rows() === Set(
+      (ts("2024-01-01 00:00:00"), ts("2024-01-01 00:15:00"), 1L, 2L),
+      (ts("2024-01-01 00:02:00"), ts("2024-01-01 00:12:00"), 2L, 1L)))
+  }
+
   test("nearDupDedup drops reformatted content by signature, keeps first") {
     implicit val ctx = spark.sqlContext
     val in = MemoryStream[TestDoc]

@@ -271,6 +271,9 @@ class TextAnalysisSpec extends SparkSpec {
         .select("source", "n_docs", "n_keep", "avg_quality")
         .as[(String, Long, Long, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    // the shared per-row core appends its two signals as adjacent columns
+    assert(TextAnalysis.withKeepQuality(docs, "text").columns
+      .containsSlice(Seq("keep", "quality")))
     val dflt = run(TextAnalysis.sourceReport)
     assert(dflt("srcA")._1 === 2L && dflt("srcA")._2 === 1L)
     assert(dflt("srcB")._1 === 1L && dflt("srcB")._2 === 1L)
@@ -295,10 +298,11 @@ class TextAnalysisSpec extends SparkSpec {
       (4L, s"$stop20 " + "#### #### ####"),         // symbol ratio
       (5L, Seq.fill(21)("word").mkString(" "))      // no stopwords
     ).toDF("doc_id", "text")
-    val out = TextAnalysis.gopherRules(docs, "doc_id", "text",
+    val gated = TextAnalysis.gopherRules(docs, "doc_id", "text",
         minWords = 5, maxWords = 100, minMeanWordLen = 2.0,
         maxMeanWordLen = 10.0, maxSymbolRatio = 0.1, minStopwords = 2)
-      .collect().map(r => r.getLong(0) ->
+    assert(gated.columns.contains("keep"))
+    val out = gated.collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4),
           r.getBoolean(5)))).toMap
     assert(out(1L)._5 === true)
